@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.{NioLocalFileSystem, NioLocalFs}
+
 /** Session plumbing shared by the runtime mains (Verify/Bench) and the
   * test harness: Hive catalog support over an embedded, per-process
   * Derby metastore.
@@ -16,6 +18,22 @@ import org.apache.spark.sql.SparkSession
   * many databases, so this coexists with the JDBC gate's Derby db),
   * and a fresh per-process directory keeps concurrent JVMs (sbt test
   * vs a Bench run) from fighting over Derby's single-owner lock.
+  *
+  * The session also rebinds the `file:` scheme, for both Hadoop APIs
+  * (`FileSystem` and `FileContext`), to [[graft.sources.NioLocalFileSystem]]
+  * and [[graft.sources.NioLocalFs]].  Without libhadoop the stock local
+  * filesystem forks `chmod` for every file and dir it creates and
+  * `readlink` twice for every FileContext rename — the streaming
+  * offset/commit logs and state-store files, parquet part files, the
+  * committer and the Hive warehouse all pay that per file.  The graft
+  * classes do the same through `java.nio.file`; what is kept is
+  * everything else: `.crc` checksum files (both Hadoop's and Spark's
+  * checkpoint checksums), the atomic rename, and the permissions with
+  * the umask applied.  `FileSystem` instances are cached JVM-wide by
+  * scheme and user, not by configuration, so the binding only takes
+  * when it is in the conf before the first `file:` lookup — that is,
+  * set on the session builder, as here, never later through
+  * `spark.conf` or `hadoopConfiguration`.
   */
 object GraftSession {
 
@@ -37,6 +55,14 @@ object GraftSession {
     withLocal.config("spark.sql.warehouse.dir", s"$base/warehouse")
       .config("spark.hadoop.javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$base/metastore;create=true")
+      // Hive's default is ${java.io.tmpdir}/${hive.session.id}_resources,
+      // which nothing deletes; under `base` the shutdown hook does
+      .config("spark.hadoop.hive.downloaded.resources.dir",
+        s"$base/$${hive.session.id}_resources")
+      // `file:` without the per-file chmod/readlink forks, for both
+      // Hadoop APIs (see the object doc)
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
       // the library's whole extension surface (optimizer rule, planner
       // strategy, SQL function names) rides one config line
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")

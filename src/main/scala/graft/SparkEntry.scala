@@ -23,7 +23,7 @@ object SparkEntry {
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = merged("gate",
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = merged("gate",
     graft.queries.Tpch.queries.toSeq ++
     graft.queries.TpchHard.queries.toSeq ++
     graft.queries.Joins.queries.toSeq ++
@@ -75,7 +75,7 @@ object SparkEntry {
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = merged("oracle",
+  lazy val oracleSql: Map[String, String] = merged("oracle",
     graft.queries.Tpch.oracle.toSeq ++
     graft.queries.TpchHard.oracle.toSeq ++
     graft.queries.Joins.oracle.toSeq ++

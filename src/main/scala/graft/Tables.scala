@@ -26,10 +26,13 @@ object Tables {
     * index + schema), never data or results: every action still scans
     * the parquet inputs.  Test data is immutable within a session, so
     * the cached file index cannot go stale; distinct dirs (alt corpora,
-    * scale rungs) get distinct entries.
+    * scale rungs) get distinct entries.  Entries of a stopped session
+    * are dropped on the next call, so the memo does not keep a dead
+    * session's SparkContext reachable.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     synchronized {
+      purgeStopped()
       loaded.getOrElseUpdate((spark, dir, name),
         if (name == "events") events(spark, dir)
         else spark.read.parquet(s"$dir/$name.parquet"))
@@ -68,6 +71,7 @@ object Tables {
     * TABLE_OR_VIEW_NOT_FOUND for the rest of the battery.
     */
   def registerAll(spark: SparkSession, dir: String): Unit = synchronized {
+    purgeStopped()
     if (!registered.contains((spark, dir))) {
       // Register each table independently: one table with an unexpected
       // schema must not poison the other nine views (a single failed
@@ -83,4 +87,9 @@ object Tables {
     }
   }
   private val registered = scala.collection.mutable.Set.empty[(SparkSession, String)]
+
+  private def purgeStopped(): Unit = {
+    loaded.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
+    registered.filterInPlace { case (s, _) => !s.sparkContext.isStopped }
+  }
 }
