@@ -3,11 +3,9 @@ package graft.sources
 import java.io.FileNotFoundException
 import java.net.URI
 import java.nio.file.{FileSystemException, FileSystems, Files, Path => JPath}
-import java.nio.file.attribute.{FileTime, PosixFilePermission}
+import java.nio.file.attribute.FileTime
 import java.security.Principal
 import java.util.concurrent.ConcurrentHashMap
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
@@ -24,9 +22,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   * streaming offset/commit logs and state-store deltas.  This class
   * does the same three things through `java.nio.file`:
   *
-  *  - `setPermission` sets the 9 rwx bits with
-  *    `Files.setPosixFilePermissions` (a sticky bit, which NIO cannot
-  *    set, still goes to `chmod`);
+  *  - `setPermission` writes the mode, sticky bit included, through
+  *    the `unix:mode` attribute (one `chmod(2)` call);
   *  - `getFileLinkStatus` answers a non-link with `getFileStatus` and
   *    hands a real symlink to the stock code;
   *  - `getFileStatus`/`listStatus` read the mode, uid and gid with the
@@ -42,15 +39,8 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
   import NioRawLocalFileSystem._
 
   override def setPermission(p: Path, permission: FsPermission): Unit =
-    if (!unixView || permission.getStickyBit) super.setPermission(p, permission)
-    else {
-      val bits = permission.toShort
-      // PosixFilePermission's order is OWNER_READ .. OTHERS_EXECUTE,
-      // i.e. mode bits 8 down to 0
-      val set = PosixFilePermission.values.toSeq
-        .filter(x => (bits & (1 << (8 - x.ordinal))) != 0)
-      Files.setPosixFilePermissions(pathToFile(p).toPath, set.toSet.asJava)
-    }
+    if (!unixView) super.setPermission(p, permission)
+    else Files.setAttribute(pathToFile(p).toPath, "unix:mode", Int.box(permission.toShort & 0x3ff))
 
   override def getFileLinkStatus(f: Path): FileStatus =
     if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
