@@ -22,106 +22,67 @@ object SparkEntry {
     entries.toMap
   }
 
+  /** Every query group as its (gates, oracles) pair. */
+  private def groups: Seq[(Map[String, (SparkSession, String) => DataFrame],
+      Map[String, String])] = {
+    import graft.queries._
+    Seq(
+      (Tpch.queries, Tpch.oracle),
+      (TpchHard.queries, TpchHard.oracle),
+      (Joins.queries, Joins.oracle),
+      (Relational.queries, Relational.oracle),
+      (OpsQueries.queries, OpsQueries.oracle),
+      (LineageQueries.queries, LineageQueries.oracle),
+      (Functions.queries, Functions.oracle),
+      (Events.queries, Events.oracle),
+      (AsOfQueries.queries, AsOfQueries.oracle),
+      (Subqueries.queries, Subqueries.oracle),
+      (Approx.queries, Approx.oracle),
+      (TopKQueries.queries, TopKQueries.oracle),
+      (SqlSurface.queries, SqlSurface.oracle),
+      (StreamingQueries.queries, StreamingQueries.oracle),
+      (PipelineQueries.queries, PipelineQueries.oracle),
+      (GateQueries.queries, GateQueries.oracle),
+      (ModernSql.queries, ModernSql.oracle),
+      (ModernSql4.queries, ModernSql4.oracle),
+      (VocabQueries.queries, VocabQueries.oracle),
+      (MergeQueries.queries, MergeQueries.oracle),
+      (FinalQueries.queries, FinalQueries.oracle),
+      (TpcdsShapes.queries, TpcdsShapes.oracle),
+      (TpcdsShapes2.queries, TpcdsShapes2.oracle),
+      (TpcdsShapes3.queries, TpcdsShapes3.oracle),
+      (TpcdsShapes4.queries, TpcdsShapes4.oracle),
+      (CoercionQueries.queries, CoercionQueries.oracle),
+      (SsbShapes.queries, SsbShapes.oracle),
+      (SubqueryCorners.queries, SubqueryCorners.oracle),
+      (GroupAnalytics.queries, GroupAnalytics.oracle),
+      (HiveQueries.queries, HiveQueries.oracle),
+      (SqlGolden.queries, SqlGolden.oracle),
+      (SketchQueries.queries, SketchQueries.oracle),
+      (SurfaceTail.queries, SurfaceTail.oracle),
+      (CorpusQueries.queries, CorpusQueries.oracle),
+      (AnalyticsQueries.queries, AnalyticsQueries.oracle),
+      (WarehouseQueries.queries, WarehouseQueries.oracle),
+      (FuzzQueries.queries, FuzzQueries.oracle),
+      (FuzzStreamQueries.queries, FuzzStreamQueries.oracle),
+      (GoldenTail.queries, GoldenTail.oracle),
+      (CurationQueries.queries, CurationQueries.oracle),
+      (QualityQueries.queries, QualityQueries.oracle),
+      (CatalogQueries.queries, CatalogQueries.oracle),
+      (TfIdfQueries.queries, TfIdfQueries.oracle),
+      (StateStoreQueries.queries, StateStoreQueries.oracle),
+      (PrefQueries.queries, PrefQueries.oracle),
+      (ChatQueries.queries, ChatQueries.oracle),
+      (MixQueries.queries, MixQueries.oracle),
+      (Utf8Queries.queries, Utf8Queries.oracle))
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = merged("gate",
-    graft.queries.Tpch.queries.toSeq ++
-    graft.queries.TpchHard.queries.toSeq ++
-    graft.queries.Joins.queries.toSeq ++
-    graft.queries.Relational.queries.toSeq ++
-    graft.queries.OpsQueries.queries.toSeq ++
-    graft.queries.LineageQueries.queries.toSeq ++
-    graft.queries.Functions.queries.toSeq ++
-    graft.queries.Events.queries.toSeq ++
-    graft.queries.AsOfQueries.queries.toSeq ++
-    graft.queries.Subqueries.queries.toSeq ++
-    graft.queries.Approx.queries.toSeq ++
-    graft.queries.TopKQueries.queries.toSeq ++
-    graft.queries.SqlSurface.queries.toSeq ++
-    graft.queries.StreamingQueries.queries.toSeq ++
-    graft.queries.PipelineQueries.queries.toSeq ++
-    graft.queries.GateQueries.queries.toSeq ++
-    graft.queries.ModernSql.queries.toSeq ++
-    graft.queries.ModernSql4.queries.toSeq ++
-    graft.queries.VocabQueries.queries.toSeq ++
-    graft.queries.MergeQueries.queries.toSeq ++
-    graft.queries.FinalQueries.queries.toSeq ++
-    graft.queries.TpcdsShapes.queries.toSeq ++
-    graft.queries.TpcdsShapes2.queries.toSeq ++
-    graft.queries.TpcdsShapes3.queries.toSeq ++
-    graft.queries.TpcdsShapes4.queries.toSeq ++
-    graft.queries.CoercionQueries.queries.toSeq ++
-    graft.queries.SsbShapes.queries.toSeq ++
-    graft.queries.SubqueryCorners.queries.toSeq ++
-    graft.queries.GroupAnalytics.queries.toSeq ++
-    graft.queries.HiveQueries.queries.toSeq ++
-    graft.queries.SqlGolden.queries.toSeq ++
-    graft.queries.SketchQueries.queries.toSeq ++
-    graft.queries.SurfaceTail.queries.toSeq ++
-    graft.queries.CorpusQueries.queries.toSeq ++
-    graft.queries.AnalyticsQueries.queries.toSeq ++
-    graft.queries.WarehouseQueries.queries.toSeq ++
-    graft.queries.FuzzQueries.queries.toSeq ++
-    graft.queries.FuzzStreamQueries.queries.toSeq ++
-    graft.queries.GoldenTail.queries.toSeq ++
-    graft.queries.CurationQueries.queries.toSeq ++
-    graft.queries.QualityQueries.queries.toSeq ++
-    graft.queries.CatalogQueries.queries.toSeq ++
-    graft.queries.TfIdfQueries.queries.toSeq ++
-    graft.queries.StateStoreQueries.queries.toSeq ++
-    graft.queries.PrefQueries.queries.toSeq ++
-    graft.queries.ChatQueries.queries.toSeq ++
-    graft.queries.MixQueries.queries.toSeq ++
-    graft.queries.Utf8Queries.queries.toSeq)
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    merged("gate", groups.flatMap(_._1))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  lazy val oracleSql: Map[String, String] = merged("oracle",
-    graft.queries.Tpch.oracle.toSeq ++
-    graft.queries.TpchHard.oracle.toSeq ++
-    graft.queries.Joins.oracle.toSeq ++
-    graft.queries.Relational.oracle.toSeq ++
-    graft.queries.OpsQueries.oracle.toSeq ++
-    graft.queries.LineageQueries.oracle.toSeq ++
-    graft.queries.Functions.oracle.toSeq ++
-    graft.queries.Events.oracle.toSeq ++
-    graft.queries.AsOfQueries.oracle.toSeq ++
-    graft.queries.Subqueries.oracle.toSeq ++
-    graft.queries.Approx.oracle.toSeq ++
-    graft.queries.TopKQueries.oracle.toSeq ++
-    graft.queries.SqlSurface.oracle.toSeq ++
-    graft.queries.StreamingQueries.oracle.toSeq ++
-    graft.queries.PipelineQueries.oracle.toSeq ++
-    graft.queries.GateQueries.oracle.toSeq ++
-    graft.queries.ModernSql.oracle.toSeq ++
-    graft.queries.ModernSql4.oracle.toSeq ++
-    graft.queries.VocabQueries.oracle.toSeq ++
-    graft.queries.MergeQueries.oracle.toSeq ++
-    graft.queries.FinalQueries.oracle.toSeq ++
-    graft.queries.TpcdsShapes.oracle.toSeq ++
-    graft.queries.TpcdsShapes2.oracle.toSeq ++
-    graft.queries.TpcdsShapes3.oracle.toSeq ++
-    graft.queries.TpcdsShapes4.oracle.toSeq ++
-    graft.queries.CoercionQueries.oracle.toSeq ++
-    graft.queries.SsbShapes.oracle.toSeq ++
-    graft.queries.SubqueryCorners.oracle.toSeq ++
-    graft.queries.GroupAnalytics.oracle.toSeq ++
-    graft.queries.HiveQueries.oracle.toSeq ++
-    graft.queries.SqlGolden.oracle.toSeq ++
-    graft.queries.SketchQueries.oracle.toSeq ++
-    graft.queries.SurfaceTail.oracle.toSeq ++
-    graft.queries.CorpusQueries.oracle.toSeq ++
-    graft.queries.AnalyticsQueries.oracle.toSeq ++
-    graft.queries.WarehouseQueries.oracle.toSeq ++
-    graft.queries.FuzzQueries.oracle.toSeq ++
-    graft.queries.FuzzStreamQueries.oracle.toSeq ++
-    graft.queries.GoldenTail.oracle.toSeq ++
-    graft.queries.CurationQueries.oracle.toSeq ++
-    graft.queries.QualityQueries.oracle.toSeq ++
-    graft.queries.CatalogQueries.oracle.toSeq ++
-    graft.queries.TfIdfQueries.oracle.toSeq ++
-    graft.queries.StateStoreQueries.oracle.toSeq ++
-    graft.queries.PrefQueries.oracle.toSeq ++
-    graft.queries.ChatQueries.oracle.toSeq ++
-    graft.queries.MixQueries.oracle.toSeq ++
-    graft.queries.Utf8Queries.oracle.toSeq)
+  lazy val oracleSql: Map[String, String] =
+    merged("oracle", groups.flatMap(_._2))
 }

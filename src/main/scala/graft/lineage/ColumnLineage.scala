@@ -1,7 +1,7 @@
 package graft.lineage
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet, ExprId, Expression, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, ExprId, Expression, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
@@ -11,6 +11,11 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   * `catalyst/lineage/{Column,ExpressionColumn,RelationColumn,UnionColumn}.scala`)
   * as a pure post-hoc walk over the *analyzed* logical plan instead of
   * analyzer-rule mutation.
+  *
+  * One walk ([[hopWalk]]) builds the hop-level derivation DAG; every
+  * other view is derived from it.  A column's source set is the set of
+  * leaves of its hop tree ([[HopNode.sources]]), and control-flow
+  * lineage is a flag of that same walk, not a second one.
   *
   * Differences from the reference, by design:
   *  - Immutable: no `var lineageChildren` on plan nodes
@@ -66,20 +71,15 @@ object ColumnLineage {
       includeControlFlow: Boolean = false): LineageGraph =
     of(spark.sql(sql), includeControlFlow)
 
-  /** Lineage of an already-analyzed plan. */
+  /** Lineage of an already-analyzed plan: each output's hop-tree
+    * leaves.  An output the walk derives nothing for (a typed map's
+    * object column) has no sources.
+    */
   def ofPlan(plan: LogicalPlan,
       includeControlFlow: Boolean = false): LineageGraph = {
-    val resolved = resolve(plan, None, Map.empty, includeControlFlow)
-    LineageGraph(plan.output.map(a =>
-      OutputLineage(a.name, resolved.getOrElse(a.exprId, Set.empty))))
-  }
-
-  /** Output ExprId → leaf sources, for [[LineageRegistry.capture]]. */
-  private[lineage] def outputSources(plan: LogicalPlan)
-      : Map[ExprId, Set[SourceColumn]] = {
-    val resolved = resolve(plan, None, Map.empty, cf = false)
-    plan.output.map(a =>
-      a.exprId -> resolved.getOrElse(a.exprId, Set.empty[SourceColumn])).toMap
+    val m = hopWalk(plan, None, Map.empty, includeControlFlow)
+    LineageGraph(plan.output.map(a => OutputLineage(a.name,
+      m.get(a.exprId).fold(Set.empty[SourceColumn])(_.sources))))
   }
 
   /** Best-effort identity of a leaf relation (mirrors the reference's
@@ -138,176 +138,36 @@ object ColumnLineage {
     case _ => None
   }
 
-  /** Core recursion: map from ExprId to leaf source columns for every
-    * attribute visible at `plan`'s output (plus intermediates).
-    */
-  /** CTE context: def id → (def output, def lineage map). */
-  private type CteCtx = Map[Long, (Seq[Attribute], Map[ExprId, Set[SourceColumn]])]
-
-  private def resolve(plan: LogicalPlan, alias: Option[String], ctes: CteCtx,
-      cf: Boolean): Map[ExprId, Set[SourceColumn]] = plan match {
-
-    case s: SubqueryAlias =>
-      // name the subtree after the alias only if its leaves are anonymous
-      resolve(s.child, Some(s.alias), ctes, cf)
-
-    case w: WithCTE =>
-      // resolve defs first (later defs may reference earlier ones)
-      val defCtx = w.cteDefs.foldLeft(ctes) { (ctx, d) =>
-        ctx + (d.id -> (d.child.output, resolve(d.child, None, ctx, cf)))
-      }
-      resolve(w.plan, alias, defCtx, cf)
-
-    case r: CTERelationRef if ctes.contains(r.cteId) =>
-      // positional mapping from the ref's fresh attribute ids to the
-      // def's resolved sources (same algorithm as Union pairing)
-      val (defOut, defMap) = ctes(r.cteId)
-      r.output.zip(defOut).map { case (refAttr, defAttr) =>
-        refAttr.exprId -> defMap.getOrElse(defAttr.exprId, Set.empty[SourceColumn])
-      }.toMap
-
-    case l: LeafNode =>
-      // a checkpointed ops pipeline surfaces as a LogicalRDD leaf; if
-      // its output was captured at checkpoint time, splice the
-      // pre-checkpoint lineage in instead of naming the RDD a source.
-      // Self-joined checkpoints get re-instanced with fresh ExprIds
-      // during analysis — fall back to the (rdd id, column) identity.
-      val table = alias.getOrElse(leafName(l))
-      val rddId = l match {
-        case r: org.apache.spark.sql.execution.LogicalRDD => Some(r.rdd.id)
-        case _ => None
-      }
-      // a table that a captured WRITE produced splices the writing
-      // query's lineage in (durable identity key) — lineage composes
-      // across materializations
-      val tableId = leafTableId(l)
-      l.output.map(a => a.exprId ->
-        LineageRegistry.lookup(a.exprId)
-          .orElse(rddId.flatMap(LineageRegistry.lookupByRdd(_, a.name)))
-          .orElse(tableId.flatMap(LineageRegistry.lookupTable(_, a.name)))
-          .getOrElse(Set(SourceColumn(table, a.name)))).toMap
-
-    case p: Project =>
-      val child = resolveChildren(p, alias, ctes, cf)
-      child ++ namedEdges(p.projectList, child, cf)
-
-    case a: Aggregate =>
-      val child = resolveChildren(a, alias, ctes, cf)
-      child ++ namedEdges(a.aggregateExpressions, child, cf)
-
-    case w: Window =>
-      val child = resolveChildren(w, alias, ctes, cf)
-      child ++ namedEdges(w.windowExpressions, child, cf)
-
-    case g: Generate =>
-      val child = resolveChildren(g, alias, ctes, cf)
-      val genSources = exprSources(g.generator, child, cf)
-      child ++ g.generatorOutput.map(a => a.exprId -> genSources).toMap
-
-    // control-flow mode: a predicate's sources feed every surviving
-    // column — the row's presence is derived from them (SURVEY §7
-    // hard-part (a): the reference leaves these edges undefined)
-    case f: Filter if cf =>
-      val child = resolveChildren(f, alias, ctes, cf)
-      val pred = exprSources(f.condition, child, cf)
-      child.map { case (k, v) => k -> (v ++ pred) }
-
-    case j: Join if cf && j.condition.isDefined =>
-      val child = resolveChildren(j, alias, ctes, cf)
-      val pred = exprSources(j.condition.get, child, cf)
-      child.map { case (k, v) => k -> (v ++ pred) }
-
-    case u: Union =>
-      // n-ary positional pairing (reference: binary-only UnionColumn zip,
-      // ResolveLineage.scala:96-107)
-      val childMaps = u.children.map(c => (c, resolve(c, alias, ctes, cf)))
-      u.output.zipWithIndex.map { case (out, i) =>
-        out.exprId -> childMaps.flatMap { case (c, m) =>
-          m.getOrElse(c.output(i).exprId, Set.empty)
-        }.toSet
-      }.toMap
-
-    case e: Expand =>
-      val child = resolveChildren(e, alias, ctes, cf)
-      child ++ e.output.zipWithIndex.map { case (out, i) =>
-        out.exprId -> e.projections.flatMap(proj =>
-          exprSources(proj(i), child, cf)).toSet
-      }.toMap
-
-    // row-level rewrite assembly (UPDATE / MERGE INTO → ReplaceData):
-    // each output position is produced by one expression per merge
-    // instruction — MergeRows.outputs is positionally aligned with
-    // MergeRows.output — so union every instruction's sources for the
-    // position (the Expand device).  Without this case the node's
-    // freshly-produced attrs resolve to nothing and a MERGE target's
-    // sink lineage silently loses the merge source.
-    case m: MergeRows =>
-      val child = resolveChildren(m, alias, ctes, cf)
-      child ++ m.output.zipWithIndex.map { case (out, i) =>
-        out.exprId -> m.outputs.flatMap(row =>
-          if (i < row.size) exprSources(row(i), child, cf)
-          else Set.empty[SourceColumn]).toSet
-      }.toMap
-
-    case _ =>
-      // Join, Filter, Sort, Limit, Distinct, Repartition, subquery glue…:
-      // output attributes pass through from children unchanged.
-      resolveChildren(plan, alias, ctes, cf)
-  }
-
-  private def resolveChildren(plan: LogicalPlan, alias: Option[String],
-      ctes: CteCtx, cf: Boolean): Map[ExprId, Set[SourceColumn]] =
-    plan.children.map(resolve(_, alias match {
-      case Some(_) if plan.children.sizeIs == 1 => alias
-      case _ => None
-    }, ctes, cf)).foldLeft(Map.empty[ExprId, Set[SourceColumn]])(_ ++ _)
-
-  /** ExprId-join of each named expression's leaf references against the
-    * child map (the reference's fetchRelation/findAllChildren,
-    * `ResolveLineage.scala:32-74`).
-    */
-  private def namedEdges(exprs: Seq[NamedExpression],
-      child: Map[ExprId, Set[SourceColumn]], cf: Boolean)
-      : Map[ExprId, Set[SourceColumn]] =
-    exprs.map { ne => ne.exprId -> exprSources(ne, child, cf) }.toMap
-
-  /** All leaf sources feeding one expression, including through scalar
-    * subqueries (the reference skips subquery expressions entirely).
-    */
-  private def exprSources(e: Expression,
-      child: Map[ExprId, Set[SourceColumn]], cf: Boolean): Set[SourceColumn] = {
-    val direct = e.references.iterator
-      .flatMap(a => child.getOrElse(a.exprId, Set.empty)).toSet
-    val viaSubquery = e.collect {
-      case sq: org.apache.spark.sql.catalyst.expressions.SubqueryExpression =>
-        sq.plan.output.flatMap(a =>
-          resolve(sq.plan, None, Map.empty, cf)
-            .getOrElse(a.exprId, Set.empty)).toSet
-    }.flatten.toSet
-    direct ++ viaSubquery
-  }
-
   // ──────────────────── hop-level derivation DAG ────────────────────
   //
-  // Where LineageGraph flattens to output → leaf-source CLOSURE, the
-  // hop view preserves every intermediate named derivation — the
+  // The hop view preserves every intermediate named derivation — the
   // structure the reference keeps as `Column extends TreeNode[Column]`
   // (`catalyst/lineage/Column.scala:23`), one `ExpressionColumn`
   // (`ExpressionColumn.scala:22`) per deriving expression with
-  // `RelationColumn` leaves.  Differences, by design:
+  // `RelationColumn` leaves.  LineageGraph flattens it to each output's
+  // leaf-source closure.  Differences, by design:
   //  - pass-through attributes are NOT hops (an untouched column
   //    flowing through a node derives nothing; a RENAME is a hop);
   //  - the DAG is immutable and shared (same sub-derivation feeding
   //    two outputs is one node), so plan copies can't lose it;
-  //  - a lineage-erasing checkpoint boundary degrades gracefully to a
-  //    single "checkpoint" hop over the registry-spliced leaf sources
-  //    (intermediate hops below the checkpoint are gone by then).
+  //  - a lineage-erasing checkpoint or table write splices in the
+  //    registered pre-materialization tree ([[LineageRegistry]]); a
+  //    captured column that derived from nothing is a childless
+  //    "checkpoint" hop.
 
   /** One node of a column's derivation tree. */
   sealed trait HopNode {
     /** One-line description (the reference's `ExpressionColumn.toString`). */
     def label: String
     def children: Seq[HopNode]
+
+    /** Leaf source columns of this derivation.  Memoized: a sub-DAG
+      * shared by many outputs unions its leaves once.
+      */
+    lazy val sources: Set[SourceColumn] = this match {
+      case LeafHop(source) => Set(source)
+      case _ => children.foldLeft(Set.empty[SourceColumn])(_ ++ _.sources)
+    }
 
     /** Nested rendering of the derivation, reference
       * `lineageChildren(i).treeString` style
@@ -343,7 +203,7 @@ object ColumnLineage {
 
   /** Derivation trees of an analyzed plan's output columns. */
   def hopsOfPlan(plan: LogicalPlan): Seq[(String, HopNode)] = {
-    val m = hopWalk(plan, None, Map.empty)
+    val m = hopWalk(plan, None, Map.empty, cf = false)
     plan.output.map(a => a.name -> m.getOrElse(a.exprId,
       LeafHop(SourceColumn("unknown", a.name))))
   }
@@ -351,7 +211,7 @@ object ColumnLineage {
   /** Output ExprId → hop tree, for [[LineageRegistry.capture]]. */
   private[lineage] def outputHops(plan: LogicalPlan)
       : Map[ExprId, HopNode] = {
-    val m = hopWalk(plan, None, Map.empty)
+    val m = hopWalk(plan, None, Map.empty, cf = false)
     plan.output.flatMap(a => m.get(a.exprId).map(a.exprId -> _)).toMap
   }
 
@@ -390,27 +250,46 @@ object ColumnLineage {
   private def sqlOf(e: Expression): String =
     scala.util.Try(e.sql).getOrElse(e.toString)
 
+  /** CTE context: def id → (def output, def hop map). */
   private type HopCtx = Map[Long, (Seq[Attribute], Map[ExprId, HopNode])]
 
-  private def hopWalk(plan: LogicalPlan, alias: Option[String], ctes: HopCtx)
-      : Map[ExprId, HopNode] = plan match {
+  /** The lineage walk: ExprId → hop tree for every attribute visible at
+    * `plan`'s output (plus intermediates).  `cf` (control flow) adds
+    * predicate edges: a column surviving a `Filter` or a conditioned
+    * `Join` is wrapped in a hop whose extra children are the
+    * predicate's inputs (SURVEY §7 hard-part (a): the reference leaves
+    * these edges undefined).  Renderings always walk with `cf = false`.
+    */
+  private def hopWalk(plan: LogicalPlan, alias: Option[String], ctes: HopCtx,
+      cf: Boolean): Map[ExprId, HopNode] = plan match {
 
     case s: SubqueryAlias =>
-      hopWalk(s.child, Some(s.alias), ctes)
+      // name the subtree after the alias only if its leaves are anonymous
+      hopWalk(s.child, Some(s.alias), ctes, cf)
 
     case w: WithCTE =>
+      // walk defs first (later defs may reference earlier ones)
       val defCtx = w.cteDefs.foldLeft(ctes) { (ctx, d) =>
-        ctx + (d.id -> (d.child.output, hopWalk(d.child, None, ctx)))
+        ctx + (d.id -> (d.child.output, hopWalk(d.child, None, ctx, cf)))
       }
-      hopWalk(w.plan, alias, defCtx)
+      hopWalk(w.plan, alias, defCtx, cf)
 
     case r: CTERelationRef if ctes.contains(r.cteId) =>
+      // positional mapping from the ref's fresh attribute ids to the
+      // def's hops (same algorithm as Union pairing)
       val (defOut, defMap) = ctes(r.cteId)
       r.output.zip(defOut).flatMap { case (refAttr, defAttr) =>
         defMap.get(defAttr.exprId).map(refAttr.exprId -> _)
       }.toMap
 
     case l: LeafNode =>
+      // a checkpointed ops pipeline surfaces as a LogicalRDD leaf, a
+      // table that a captured WRITE produced as a relation leaf: splice
+      // the registered pre-materialization hop tree in instead of
+      // naming the leaf a source, so lineage composes across
+      // materializations.  Self-joined checkpoints get re-instanced
+      // with fresh ExprIds during analysis — fall back to the (rdd id,
+      // column) identity.
       val table = alias.getOrElse(leafName(l))
       val rddId = l match {
         case r: org.apache.spark.sql.execution.LogicalRDD => Some(r.rdd.id)
@@ -418,45 +297,43 @@ object ColumnLineage {
       }
       val tableId = leafTableId(l)
       l.output.map { a =>
-        // full pre-checkpoint hop tree when the registry captured one
-        // (lineage-erasing localCheckpoints in the ops layer), or the
-        // writing query's hop tree for a captured SINK table; source
-        // sets as the degraded fallback; a raw leaf otherwise
-        val hopTree = LineageRegistry.lookupHop(a.exprId)
+        a.exprId -> LineageRegistry.lookupHop(a.exprId)
           .orElse(rddId.flatMap(LineageRegistry.lookupHopByRdd(_, a.name)))
           .orElse(tableId.flatMap(LineageRegistry.lookupTableHop(_, a.name)))
-        val spliced = LineageRegistry.lookup(a.exprId)
-          .orElse(rddId.flatMap(LineageRegistry.lookupByRdd(_, a.name)))
-          .orElse(tableId.flatMap(LineageRegistry.lookupTable(_, a.name)))
-        a.exprId -> hopTree.getOrElse(spliced match {
-          case Some(srcs) =>
-            DerivedHop(a.name, "checkpoint", l.nodeName,
-              srcs.toSeq.sortBy(s => (s.table, s.column)).map(LeafHop.apply))
-          case None => LeafHop(SourceColumn(table, a.name))
-        })
+          .getOrElse(LeafHop(SourceColumn(table, a.name)))
       }.toMap
 
     case p: Project =>
-      val child = hopChildren(p, alias, ctes)
-      child ++ namedHops(p.projectList, "Project", child)
+      val child = hopChildren(p, alias, ctes, cf)
+      child ++ namedHops(p.projectList, "Project", child, cf)
 
     case a: Aggregate =>
-      val child = hopChildren(a, alias, ctes)
-      child ++ namedHops(a.aggregateExpressions, "Aggregate", child)
+      val child = hopChildren(a, alias, ctes, cf)
+      child ++ namedHops(a.aggregateExpressions, "Aggregate", child, cf)
 
     case w: Window =>
-      val child = hopChildren(w, alias, ctes)
-      child ++ namedHops(w.windowExpressions, "Window", child)
+      val child = hopChildren(w, alias, ctes, cf)
+      child ++ namedHops(w.windowExpressions, "Window", child, cf)
 
     case g: Generate =>
-      val child = hopChildren(g, alias, ctes)
-      val kids = exprHopInputs(g.generator, child)
+      val child = hopChildren(g, alias, ctes, cf)
+      val kids = exprHopInputs(g.generator, child, cf)
       val sql = sqlOf(g.generator)
       child ++ g.generatorOutput.map(a =>
         a.exprId -> (DerivedHop(a.name, sql, "Generate", kids): HopNode)).toMap
 
+    // control-flow mode: a predicate's inputs feed every surviving
+    // column — the row's presence is derived from them
+    case f: Filter if cf =>
+      guarded(f, f.condition, hopChildren(f, alias, ctes, cf))
+
+    case j: Join if cf && j.condition.isDefined =>
+      guarded(j, j.condition.get, hopChildren(j, alias, ctes, cf))
+
     case u: Union =>
-      val childMaps = u.children.map(c => (c, hopWalk(c, alias, ctes)))
+      // n-ary positional pairing (reference: binary-only UnionColumn zip,
+      // ResolveLineage.scala:96-107)
+      val childMaps = u.children.map(c => (c, hopWalk(c, alias, ctes, cf)))
       u.output.zipWithIndex.map { case (out, i) =>
         out.exprId -> (DerivedHop(out.name, "union", "Union",
           childMaps.flatMap { case (c, m) =>
@@ -465,63 +342,79 @@ object ColumnLineage {
       }.toMap
 
     case e: Expand =>
-      val child = hopChildren(e, alias, ctes)
+      val child = hopChildren(e, alias, ctes, cf)
       child ++ e.output.zipWithIndex.map { case (out, i) =>
         out.exprId -> (DerivedHop(out.name, "expand", "Expand",
           dedupIdentity(e.projections.flatMap(proj =>
-            exprHopInputs(proj(i), child)))): HopNode)
+            exprHopInputs(proj(i), child, cf)))): HopNode)
       }.toMap
 
-    // row-level rewrite assembly: same positional-union shape as
-    // Expand — each output column's hop gathers every merge
-    // instruction's expression for that position (see the sources-side
-    // MergeRows case)
+    // row-level rewrite assembly (UPDATE / MERGE INTO → ReplaceData):
+    // each output position is produced by one expression per merge
+    // instruction — MergeRows.outputs is positionally aligned with
+    // MergeRows.output — so one hop per position gathers every
+    // instruction's expression for it (the Expand device).  Without
+    // this case the node's freshly-produced attrs resolve to nothing
+    // and a MERGE target's sink lineage silently loses the merge source.
     case m: MergeRows =>
-      val child = hopChildren(m, alias, ctes)
+      val child = hopChildren(m, alias, ctes, cf)
       child ++ m.output.zipWithIndex.map { case (out, i) =>
         out.exprId -> (DerivedHop(out.name, "merge", "MergeRows",
           dedupIdentity(m.outputs.flatMap(row =>
-            if (i < row.size) exprHopInputs(row(i), child)
+            if (i < row.size) exprHopInputs(row(i), child, cf)
             else Nil))): HopNode)
       }.toMap
 
     case _ =>
-      hopChildren(plan, alias, ctes)
+      // Join, Filter, Sort, Limit, Distinct, Repartition, subquery glue…:
+      // output attributes pass through from children unchanged.
+      hopChildren(plan, alias, ctes, cf)
   }
 
   private def hopChildren(plan: LogicalPlan, alias: Option[String],
-      ctes: HopCtx): Map[ExprId, HopNode] =
+      ctes: HopCtx, cf: Boolean): Map[ExprId, HopNode] =
     plan.children.map(hopWalk(_, alias match {
       case Some(_) if plan.children.sizeIs == 1 => alias
       case _ => None
-    }, ctes)).foldLeft(Map.empty[ExprId, HopNode])(_ ++ _)
+    }, ctes, cf)).foldLeft(Map.empty[ExprId, HopNode])(_ ++ _)
+
+  /** Control-flow wrap: each surviving column's hop gains the
+    * predicate's inputs as extra children. */
+  private def guarded(node: LogicalPlan, predicate: Expression,
+      child: Map[ExprId, HopNode]): Map[ExprId, HopNode] = {
+    val pred = exprHopInputs(predicate, child, cf = true)
+    val sql = sqlOf(predicate)
+    child ++ node.output.flatMap(a => child.get(a.exprId).map(h =>
+      a.exprId -> (DerivedHop(a.name, sql, node.nodeName, h +: pred): HopNode)))
+  }
 
   /** One hop per DERIVING named expression: an alias records a hop
     * (renames included); a bare attribute passes its node through.
     */
   private def namedHops(exprs: Seq[NamedExpression], node: String,
-      child: Map[ExprId, HopNode]): Map[ExprId, HopNode] =
+      child: Map[ExprId, HopNode], cf: Boolean): Map[ExprId, HopNode] =
     exprs.flatMap {
       case a: Attribute =>
         child.get(a.exprId).map(a.exprId -> _)
       case al: Alias =>
         Some(al.exprId -> (DerivedHop(al.name, sqlOf(al.child), node,
-          exprHopInputs(al.child, child)): HopNode))
+          exprHopInputs(al.child, child, cf)): HopNode))
       case ne =>
         Some(ne.exprId -> (DerivedHop(ne.name, sqlOf(ne), node,
-          exprHopInputs(ne, child)): HopNode))
+          exprHopInputs(ne, child, cf)): HopNode))
     }.toMap
 
   /** Upstream hop nodes an expression reads: its attribute references
-    * (name-ordered for determinism) plus subquery plan outputs.
+    * (name-ordered for determinism) plus subquery plan outputs (the
+    * reference skips subquery expressions entirely).
     */
-  private def exprHopInputs(e: Expression, child: Map[ExprId, HopNode])
-      : Seq[HopNode] = {
+  private def exprHopInputs(e: Expression, child: Map[ExprId, HopNode],
+      cf: Boolean): Seq[HopNode] = {
     val direct = e.references.toSeq.sortBy(a => (a.name, a.exprId.id))
       .flatMap(a => child.get(a.exprId))
     val viaSubquery = e.collect {
       case sq: org.apache.spark.sql.catalyst.expressions.SubqueryExpression =>
-        val m = hopWalk(sq.plan, None, Map.empty)
+        val m = hopWalk(sq.plan, None, Map.empty, cf)
         sq.plan.output.flatMap(a => m.get(a.exprId))
     }.flatten
     dedupIdentity(direct ++ viaSubquery)

@@ -25,8 +25,14 @@ private[graft] object CacheScope {
     * evidence.  Never set by Bench/Verify (or the driver): execution
     * semantics are unchanged whenever the variable is absent.
     */
-  private val noCheckpoint =
-    sys.env.get("SPARK_GRAFT_NOCHECKPOINT").contains("1")
+  private lazy val noCheckpoint = {
+    val on = sys.env.get("SPARK_GRAFT_NOCHECKPOINT").contains("1")
+    // a dev mode is announced, not silent: it changes what every
+    // checkpointing operator materializes, frees and records
+    if (on) System.err.println("[cachescope] SPARK_GRAFT_NOCHECKPOINT=1: " +
+      "operator checkpoints, cache release and lineage capture are all skipped")
+    on
+  }
 
   /** Materialize `result`, then unpersist every cache it was built from.
     * The pre-checkpoint lineage is captured into

@@ -687,6 +687,42 @@ class LineageSpec extends SparkSpec {
       gj("o_totalprice").toString)
   }
 
+  test("control-flow mode: an IN (SELECT …) predicate's subquery " +
+      "columns reach every surviving output") {
+    li.createOrReplaceTempView("cf_li")
+    Tables.load(spark, sf, "orders").createOrReplaceTempView("cf_ord")
+    def table(view: String) =
+      ColumnLineage.ofSql(spark, s"SELECT * FROM $view")
+        .outputs.head.sources.head.table
+    val q = "SELECT l_orderkey, l_quantity FROM cf_li WHERE l_orderkey IN " +
+      "(SELECT o_orderkey FROM cf_ord WHERE o_totalprice > 1000)"
+    val data = ColumnLineage.ofSql(spark, q)
+    assert(data("l_quantity") == Set(src(table("cf_li"), "l_quantity")))
+    val g = ColumnLineage.ofSql(spark, q, includeControlFlow = true)
+    // the subquery's own filter is control flow too: o_totalprice
+    // decides which keys the IN list holds
+    val pred = Set(src(table("cf_li"), "l_orderkey"),
+      src(table("cf_ord"), "o_orderkey"), src(table("cf_ord"), "o_totalprice"))
+    assert(g("l_quantity") == pred + src(table("cf_li"), "l_quantity"),
+      g("l_quantity").toString)
+    assert(g("l_orderkey") == pred, g("l_orderkey").toString)
+  }
+
+  test("control-flow mode over a checkpointed op output: the spliced " +
+      "data lineage plus the filter column's sources") {
+    val docs = Tables.load(spark, sf, "documents")
+      .filter(col("doc_id") < 60)
+    val docTable = ColumnLineage.of(docs).outputs.head.sources.head.table
+    val kept = graft.ops.Dedup.minhashPairs(docs, "doc_id", "text",
+      threshold = 0.5).filter(col("jaccard") > 0.6).select("id_a")
+    assert(ColumnLineage.of(kept)("id_a") == Set(src(docTable, "doc_id")))
+    // the capture spliced behind the checkpoint is data flow; the
+    // jaccard filter above it adds jaccard's sources
+    val g = ColumnLineage.of(kept, includeControlFlow = true)
+    assert(g("id_a") == Set(src(docTable, "doc_id"), src(docTable, "text")),
+      g("id_a").toString)
+  }
+
   test("RUNNING query: stable plan names the v1 file stream; the last " +
       "micro-batch's IncrementalExecution traces to the concrete batch " +
       "relation it served") {

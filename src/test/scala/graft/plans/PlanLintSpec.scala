@@ -26,6 +26,7 @@ class PlanLintSpec extends SparkSpec {
     "q_bitext_margin",       // same shape: corpus side × broadcast 8-probe batch
     "q_skew_report",         // two 1-row aggregates cross-joined into the summary row
     "q_target_encode",       // 1-row global-total broadcast cross-joined into the category table
+    "q_k_suppress",          // 1-row max(group_size) div 2 scalar aggregate (Privacy.suppressBelowHalfMax) broadcast-crossed into the sized rows: the q_target_encode class
     "q_ks_test",             // 1-row sample-size aggregate cross-joined into the integer-D max
     "q_ks_continuous",       // same fold, raw-double variant (the reshape's motivating case)
     "q_pr_curve",            // 1-row positives-total aggregate cross-joined into the threshold sweep (the r15 ECDF reshape)
