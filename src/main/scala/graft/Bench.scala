@@ -2,7 +2,9 @@ package graft
 
 import scala.collection.mutable
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ListenerBridge
 
 /** Driver-run benchmark.
   *
@@ -18,15 +20,24 @@ import org.apache.spark.sql.SparkSession
   *    output tail, and the r15/r16 lines (~2,070+) lost their opening
   *    chars to that capture, zeroing the driver's bench parse for two
   *    rounds.  Optional list fields are capped (full versions in
-  *    BENCH_SUMMARY.json); the required contract fields
-  *    (metric/value/unit/sf/queries) are never dropped.
+  *    BENCH_SUMMARY.json); metric/value/unit/sf are never dropped, and
+  *    the headline `queries` map loses entries from its end (with a
+  *    stderr warning) only if the most compact line still overflows
+  *    ([[fitLine]]).
   *  - ./BENCH_FULL.json: {entry: {"median": s, "runs": [...], "err":
   *    null|"..."}} for EVERY entry — the complete record the summary
   *    line is derived from.
   *
   * A warmup pass (table file-index + codegen + JIT on a trivial action
   * per table) runs before timing; queries run in sorted name order for
-  * run-to-run comparability.
+  * run-to-run comparability.  Every timed run goes through [[runGate]];
+  * a warmup that fails says so on stderr.
+  *
+  * A subset run (`SPARK_GRAFT_BENCH_ONLY`) also prints, before the
+  * summary line, each gate's execution profile from the timed passes:
+  * median wall, and per pass the jobs, executed stages, tasks, executor
+  * and GC time and shuffle volume, then its 8 stages with the most
+  * executor time ([[Tally]]).
   *
   * Entries are reported in two CLASSES: data-scaling gates and
   * protocol-constant streaming-replay gates ([[isProtocol]]), with
@@ -38,6 +49,144 @@ import org.apache.spark.sql.SparkSession
   * gate instead of costing a judge adjudication.
   */
 object Bench {
+  /** Local property naming the gate whose jobs a thread submits: set by
+    * [[runGate]], read by [[Tally]].
+    */
+  private[graft] val GateKey = "graft.gate"
+
+  /** One finished run of a gate: wall seconds and result row count. */
+  final case class Timed(secs: Double, rows: Long)
+
+  /** One timed run of gate `name` over corpus `dir`: tag the thread's
+    * jobs with the gate, time `fn(spark, dir).count()` (the gate's build
+    * included), untag, then release the gate's scratch outside the timed
+    * region.  Left is the error's first line.
+    */
+  def runGate(spark: SparkSession, name: String, dir: String): Either[String, Timed] = {
+    val sc = spark.sparkContext
+    sc.setLocalProperty(GateKey, name)
+    val t0 = System.nanoTime()
+    val r =
+      try {
+        val rows = SparkEntry.queries(name)(spark, dir).count()
+        Right(Timed((System.nanoTime() - t0) / 1e9, rows))
+      } catch { case e: Throwable => Left(firstLine(e)) }
+      finally sc.setLocalProperty(GateKey, null)
+    // replay corpora, checkpoints, round-trip files: a 602-entry
+    // battery must not accumulate every gate's debris
+    TmpCleanup.releaseGateScratch()
+    r
+  }
+
+  /** Warm the file indexes, parquet footers and first codegen of every
+    * table under `dir` with one trivial action each.
+    */
+  def warmTables(spark: SparkSession, dir: String): Unit =
+    Tables.names.foreach { t =>
+      try Tables.load(spark, dir, t).limit(1).count()
+      catch { case e: Throwable => warmupFailed(t, firstLine(e)) }
+    }
+
+  private def warmupFailed(name: String, err: String): Unit =
+    System.err.println(s"[bench] warmup $name failed: $err")
+
+  private def firstLine(e: Throwable): String = {
+    val m = Option(e.getMessage).getOrElse(e.getClass.getName)
+    m.linesIterator.nextOption().getOrElse(m).take(160)
+  }
+
+  /** One executed stage's share of a gate's runs. */
+  final case class StageStat(name: String = "", tasks: Int = 0,
+      execMs: Long = 0L, gcMs: Long = 0L, shufReadB: Long = 0L,
+      shufWriteB: Long = 0L, wallMs: Long = 0L)
+
+  /** A gate's jobs and executed stages, summed over its runs. */
+  final case class GateStat(jobs: Int = 0, stages: Map[Int, StageStat] = Map.empty) {
+    def total(f: StageStat => Long): Long = stages.values.map(f).sum
+  }
+
+  /** The runners' one stage listener.  Each job and stage belongs to the
+    * gate named by the [[GateKey]] property of the thread that submitted
+    * it; jobs without one are left out.  Per gate it counts jobs, and per
+    * executed stage the tasks, executor run time, GC, shuffle read and
+    * write bytes, wall time and name.  Events arrive asynchronously: read
+    * the tally only after `ListenerBridge.drain`.
+    */
+  final class Tally extends SparkListener {
+    private val stageGate = mutable.Map.empty[Int, String]
+    private var gates = Map.empty[String, GateStat]
+
+    private def gateOf(p: java.util.Properties): Option[String] =
+      Option(p).flatMap(q => Option(q.getProperty(GateKey)))
+    private def update(g: String)(f: GateStat => GateStat): Unit =
+      gates = gates.updated(g, f(gates.getOrElse(g, GateStat())))
+    private def updateStage(id: Int)(f: StageStat => StageStat): Unit =
+      stageGate.get(id).foreach(update(_) { g =>
+        g.copy(stages = g.stages.updated(id, f(g.stages.getOrElse(id, StageStat()))))
+      })
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      gateOf(e.properties).foreach(update(_)(g => g.copy(jobs = g.jobs + 1)))
+    }
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = synchronized {
+      gateOf(e.properties).foreach { g =>
+        stageGate(e.stageInfo.stageId) = g
+        updateStage(e.stageInfo.stageId)(identity)
+      }
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      updateStage(e.stageId) { s =>
+        val m = e.taskMetrics
+        if (m == null) s.copy(tasks = s.tasks + 1)
+        else s.copy(tasks = s.tasks + 1,
+          execMs = s.execMs + m.executorRunTime,
+          gcMs = s.gcMs + m.jvmGCTime,
+          shufReadB = s.shufReadB + m.shuffleReadMetrics.totalBytesRead,
+          shufWriteB = s.shufWriteB + m.shuffleWriteMetrics.bytesWritten)
+      }
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      val i = e.stageInfo
+      updateStage(i.stageId)(s => s.copy(
+        name = i.name.linesIterator.nextOption().getOrElse("").take(90),
+        wallMs = s.wallMs + (for (t0 <- i.submissionTime; t1 <- i.completionTime)
+          yield t1 - t0).getOrElse(0L)))
+    }
+
+    def apply(gate: String): GateStat = synchronized(gates.getOrElse(gate, GateStat()))
+    def gateNames: Set[String] = synchronized(gates.keySet)
+    def clear(): Unit = synchronized { stageGate.clear(); gates = Map.empty }
+  }
+
+  /** A gate's profile over `passes` timed runs: the median wall, then per
+    * pass its jobs, stages, tasks, executor and GC time and shuffle
+    * volume, then the 8 stages (of all passes) with the most executor
+    * time.
+    */
+  private def profile(name: String, walls: Seq[Double], passes: Int, g: GateStat): Seq[String] = {
+    val med = walls.sorted.lift(walls.size / 2).getOrElse(-1.0)
+    val top = g.stages.toSeq.sortBy(-_._2.execMs).take(8)
+    (f"== $name%-28s wall=${med}%7.3fs (all=${walls.map(w => f"$w%.2f").mkString(",")})" +
+      f" jobs=${g.jobs / passes}%3d stages=${g.stages.size / passes}%4d tasks=${g.total(_.tasks) / passes}%5d" +
+      f" execTime=${g.total(_.execMs) / 1e3 / passes}%7.2fs gc=${g.total(_.gcMs) / 1e3 / passes}%6.2fs" +
+      f" shufR=${g.total(_.shufReadB) / 1e6 / passes}%8.2fMB shufW=${g.total(_.shufWriteB) / 1e6 / passes}%8.2fMB") +:
+      top.map { case (id, a) =>
+        f"     stage $id%5d exec=${a.execMs / 1e3}%7.2fs wall=${a.wallMs / 1e3}%7.2fs tasks=${a.tasks}%4d " +
+          f"shufR=${a.shufReadB / 1e6}%7.2fMB shufW=${a.shufWriteB / 1e6}%7.2fMB  ${a.name}"
+      }
+  }
+
+  /** `render(entries.take(n))` for the largest `n` whose line fits in
+    * `max` chars, and the number of entries dropped from the end to get
+    * there (all of them, if not even the empty render fits).
+    */
+  private[graft] def fitLine(render: Seq[String] => String,
+      entries: Seq[String], max: Int): (String, Int) =
+    (entries.size to 0 by -1).iterator
+      .map(n => (render(entries.take(n)), entries.size - n))
+      .find(_._1.length <= max)
+      .getOrElse((render(Nil), entries.size))
+
   /** Entries echoed individually on the stdout summary line: the TPC-H
     * battery plus the operators whose cost profile matters most
     * (dedup/ANN/streaming/gates).  Everything else is still timed and
@@ -70,23 +219,11 @@ object Bench {
       "q_stream_foreachbatch_merge").contains(name)
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = GraftSession.sfDir
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = GraftSession.withHive(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // warmup: file indexes + parquet footers + first codegen
-    Tables.names.foreach { t =>
-      try Tables.load(spark, sfDir, t).limit(1).count()
-      catch { case _: Throwable => }
-    }
+    warmTables(spark, sfDir)
     // SPARK_GRAFT_BENCH_ONLY: comma-separated name prefixes — isolated
     // re-measurement of specific entries (regression triage) without
     // the 180-entry session around them.
@@ -94,24 +231,16 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.exists(n.startsWith)))
+    // a subset run prints each gate's stage profile over its timed
+    // passes (the warmup's share is cleared before they start)
+    val tally = new Tally
+    if (only.nonEmpty) spark.sparkContext.addSparkListener(tally)
     val samples = mutable.Map.empty[String, mutable.ArrayBuffer[Double]]
     val errs = mutable.Map.empty[String, String]
-    def timed(name: String): Unit = {
-      val fn = SparkEntry.queries(name)
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).count()
-        samples.getOrElseUpdate(name, mutable.ArrayBuffer.empty) +=
-          (System.nanoTime() - t0) / 1e9
-      } catch {
-        case e: Throwable =>
-          val m = Option(e.getMessage).getOrElse(e.getClass.getName)
-          errs(name) = m.linesIterator.nextOption().getOrElse(m).take(160)
-      }
-      // outside the timed region: drop this gate's scratch (replay
-      // corpora, checkpoints, round-trip files) so a 602-entry battery
-      // never accumulates session-long debris (r16 verdict item 2)
-      TmpCleanup.releaseGateScratch()
+    def timed(name: String): Unit = runGate(spark, name, sfDir) match {
+      case Right(t) =>
+        samples.getOrElseUpdate(name, mutable.ArrayBuffer.empty) += t.secs
+      case Left(e) => errs(name) = e
     }
     val dataNames = names.filterNot(isProtocol)
     val protoNames = names.filter(isProtocol)
@@ -119,11 +248,9 @@ object Bench {
     // run 1 of a cold battery is pure JIT/codegen warmup (round-12
     // q_random_walks: run 1 = 40.5 s vs 4.2-5.2 s after) and poisons
     // 3-run medians on gates whose kernels only it exercises.
-    dataNames.foreach { n =>
-      try SparkEntry.queries(n)(spark, sfDir).count()
-      catch { case _: Throwable => }
-      TmpCleanup.releaseGateScratch()
-    }
+    dataNames.foreach(n => runGate(spark, n, sfDir).left.foreach(warmupFailed(n, _)))
+    ListenerBridge.drain(spark.sparkContext)
+    tally.clear()
     // data gates: run-major (interleaved) — cross-run spread then
     // reflects steady-state noise, which the median absorbs
     for (_ <- 0 until runs; name <- dataNames) timed(name)
@@ -133,6 +260,13 @@ object Bench {
     // ±58% round-over-round with zero code cause (r12 finding 3)
     val protoRuns = math.max(runs, 5)
     for (name <- protoNames; _ <- 0 until protoRuns) timed(name)
+    if (only.nonEmpty) {
+      ListenerBridge.drain(spark.sparkContext)
+      names.foreach { n =>
+        val passes = math.max(1, if (isProtocol(n)) protoRuns else runs)
+        profile(n, samples.getOrElse(n, Nil).toSeq, passes, tally(n)).foreach(println)
+      }
+    }
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.isEmpty) -1.0 else s(s.size / 2)
@@ -248,13 +382,8 @@ object Bench {
       // poisoned median would trivially clear overThreshold and report
       // ~1.8e308 as the "defensible" number.  All-samples-failed →
       // -1 sentinel; confirm() falls back to the session median.
-      val ts = (0 until math.max(3, runs)).flatMap { _ =>
-        val t0 = System.nanoTime()
-        try { SparkEntry.queries(n)(spark, sfDir).count()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case _: Throwable => None }
-        finally TmpCleanup.releaseGateScratch()
-      }
+      val ts = (0 until math.max(3, runs))
+        .flatMap(_ => runGate(spark, n, sfDir).toOption.map(_.secs))
       if (ts.isEmpty) -1.0 else r3(median(ts))
     })
     def confirm(flags: Seq[(String, Double, Double)],
@@ -309,13 +438,8 @@ object Bench {
     // constant.  Full table → BENCH_SCALING.json (both exponents).
     val scalingEnabled = only.isEmpty &&
       sys.env.getOrElse("SPARK_GRAFT_SCALING", "1") != "0"
-    def timeOnce(n: String, dir: String): Option[Double] = {
-      val t0 = System.nanoTime()
-      try { SparkEntry.queries(n)(spark, dir).count()
-        Some((System.nanoTime() - t0) / 1e9)
-      } catch { case _: Throwable => None }
-      finally TmpCleanup.releaseGateScratch()
-    }
+    def timeOnce(n: String, dir: String): Option[Double] =
+      runGate(spark, n, dir).toOption.map(_.secs)
     /** (rawExp, adjustedExp, topRungVariableTime) */
     def expOf(lo: Double, hi: Double, c: Double): (Double, Double, Double) = {
       val raw = math.log10(math.max(hi, 1e-3) / math.max(lo, 1e-3))
@@ -334,10 +458,7 @@ object Bench {
       (rung("sf0.001"), rung("sf0.01")) match {
         case (Some(d001), Some(d01))
             if base.getFileName.toString == "sf0.1" =>
-          Seq(d001, d01).foreach(d => Tables.names.foreach { t =>
-            try Tables.load(spark, d, t).limit(1).count()
-            catch { case _: Throwable => }
-          })
+          Seq(d001, d01).foreach(warmTables(spark, _))
           val t001 = okData.flatMap(n => timeOnce(n, d001).map(n -> _)).toMap
           val t01 = okData.flatMap(n => timeOnce(n, d01).map(n -> _)).toMap
           val exps = okData.flatMap { n =>
@@ -434,10 +555,7 @@ object Bench {
       .filter(d => java.nio.file.Files.isDirectory(
         java.nio.file.Paths.get(d)))
       .map { d3 =>
-        Tables.names.foreach { t =>
-          try Tables.load(spark, d3, t).limit(1).count()
-          catch { case _: Throwable => () }
-        }
+        warmTables(spark, d3)
         val factor = sys.env.getOrElse("SPARK_GRAFT_SF3_FACTOR", "3").toDouble
         val slow15 = okData.sortBy(n => -med(n)).take(15)
         val rows = slow15.flatMap { n =>
@@ -478,8 +596,7 @@ object Bench {
     java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath), detail)
 
     // compact summary line (bounded size: headline medians only)
-    val qs = names.filter(isHeadline).map(n => s"${jq(n)}:${med(n)}")
-      .mkString("{", ",", "}")
+    val headline = names.filter(isHeadline).map(n => s"${jq(n)}:${med(n)}")
     val totalData = r3(okData.map(med).sum)
     val totalProto = r3(okProto.map(med).sum)
     val errCount = errs.size
@@ -491,10 +608,11 @@ object Bench {
     // timed action and statistics are untouched): the uncapped record
     // goes to BENCH_SUMMARY.json, while the printed line caps each
     // optional list and, if ever still over budget, drops optional
-    // fields in documented priority order.  Required contract fields
-    // (metric/value/unit/sf/queries) are never dropped.
+    // fields in documented priority order.  metric/value/unit/sf are
+    // never dropped; headline entries go last, from the end of the map.
     def assemble(slowN: Int, protoN: Int, flagN: Int,
-        scalingStr: String, upStr: String): String = {
+        scalingStr: String, upStr: String, heads: Seq[String] = headline): String = {
+      val qs = heads.mkString("{", ",", "}")
       val slow = slowest.take(slowN).map(n => s"[${jq(n)},${med(n)}]")
         .mkString("[", ",", "]")
       val slowProto = slowestProto.take(protoN)
@@ -526,7 +644,15 @@ object Bench {
       else {
         val s1 = assemble(2, 1, 2, scalingCompact, upCompact)
         if (s1.length <= 1900) s1
-        else assemble(0, 0, 1, scalingCompact, upCompact)
+        else {
+          val (line, dropped) = fitLine(
+            assemble(0, 0, 1, scalingCompact, upCompact, _), headline, 1900)
+          if (dropped > 0)
+            System.err.println(s"[bench] summary line over 1900 chars: dropped " +
+              s"the last $dropped of ${headline.size} headline entries " +
+              "(all of them are in BENCH_SUMMARY.json)")
+          line
+        }
       }
     println(summaryLine)
     // sbt prefixes stdout with "[info] ", which has tripped stdout-line

@@ -4,9 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 import graft.sources.{NioLocalFileSystem, NioLocalFs}
 
-/** Session plumbing shared by the runtime mains (Verify/Bench) and the
-  * test harness: Hive catalog support over an embedded, per-process
-  * Derby metastore.
+/** Session plumbing shared by the runtime mains (Bench, Verify,
+  * PlanAudit, PlanDump) and the test harness: one runtime session
+  * shape ([[builder]]), Hive catalog support over an embedded,
+  * per-process Derby metastore ([[withHive]]), and one scoped conf
+  * override ([[withConf]]).
   *
   * The reference engine is a Hive-era deployment — its users scan and
   * write metastore tables (reference `sql/hive/src/main/scala/org/
@@ -36,6 +38,51 @@ import graft.sources.{NioLocalFileSystem, NioLocalFs}
   * `spark.conf` or `hadoopConfiguration`.
   */
 object GraftSession {
+
+  /** `SPARK_GRAFT_CPUS`: local cores, and shuffle partitions, of every
+    * runtime main.
+    */
+  private lazy val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** `SPARK_GRAFT_SF_DIR`: the corpus the mains without a directory
+    * argument (Bench, PlanAudit, PlanDump) read.
+    */
+  lazy val sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** The runtime session shape, over [[withHive]]: `local[cpus]`, one
+    * shuffle partition per core, UTC, AQE with partition coalescing,
+    * no UI.  A main that needs more layers its own `config` calls on
+    * the returned builder before `getOrCreate()`.
+    */
+  def builder(): SparkSession.Builder = withHive(SparkSession.builder()
+    .master(s"local[$cpus]")
+    .config("spark.sql.shuffle.partitions", cpus)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.adaptive.enabled", "true")
+    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    .config("spark.ui.enabled", "false"))
+
+  /** Run `body` with the session confs `kvs` set, then put each key back
+    * as it was: a key that was set explicitly before gets its old value,
+    * any other key is unset.  The test is membership in
+    * `spark.conf.getAll`, not `getOption` — `getOption` answers a
+    * registered key's default, and writing that back would leave an
+    * explicit copy of the default in the session.  Only for eager
+    * work: a DataFrame returned from `body` plans later, under the
+    * restored confs.
+    */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val before = spark.conf.getAll
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally kvs.foreach { case (k, _) =>
+      before.get(k) match {
+        case Some(v) => spark.conf.set(k, v)
+        case None => spark.conf.unset(k)
+      }
+    }
+  }
 
   /** Add Hive support backed by a per-process temp metastore +
     * warehouse to a session builder.

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.ListenerBridge
 
 /** Generates `PLANS.md` — the committed physical-plan audit of the
   * headline operators.  Regenerate after plan-affecting changes with:
@@ -211,13 +212,13 @@ object PlanAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.withHive(
-      SparkSession.builder().master("local[8]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.ui.enabled", "false")).getOrCreate()
+    val sfDir = GraftSession.sfDir
+    // a fixed shape, independent of SPARK_GRAFT_CPUS, so the committed
+    // trees only change when a plan does
+    val spark = GraftSession.builder().master("local[8]")
+      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.adaptive.enabled", "false")
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder
@@ -246,49 +247,23 @@ object PlanAudit {
       "a SparkListener: jobs / executed stages / shuffle-map stages / " +
       "shuffle-write volume are live measurements at the audit scale, " +
       "and the note states the bounded-rounds rationale.\n")
+    val tally = new Bench.Tally
+    spark.sparkContext.addSparkListener(tally)
     iterEntries.foreach { e =>
-      val counter = new org.apache.spark.scheduler.SparkListener {
-        val jobs = new java.util.concurrent.atomic.AtomicInteger
-        val stages = new java.util.concurrent.atomic.AtomicInteger
-        val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
-        override def onJobEnd(
-            end: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          stages.incrementAndGet()
-          shuffleWrite.addAndGet(
-            sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-          ()
-        }
-      }
-      spark.sparkContext.addSparkListener(counter)
-      val t0 = System.nanoTime()
-      var secs = 0.0
-      // try/finally: a throwing gate must not leak the counting
-      // listener onto the bus and skew every subsequent operator's
-      // job/stage/shuffle numbers
-      val rows =
-        try {
-          val r = SparkEntry.queries(e.name)(spark, sfDir).count()
-          secs = math.rint((System.nanoTime() - t0) / 1e7) / 100
-          r
-        } finally {
-          // the listener bus is async; give it a moment to drain before
-          // reading the counters (audit artifact, not a correctness gate)
-          Thread.sleep(2000)
-          spark.sparkContext.removeSparkListener(counter)
-        }
-      val shuffleStages = counter.stages.get - counter.jobs.get
-      val mb = math.rint(counter.shuffleWrite.get / 1e4) / 100
+      val run = Bench.runGate(spark, e.name, sfDir)
+        .fold(err => sys.error(s"${e.name}: $err"), identity)
+      ListenerBridge.drain(spark.sparkContext)
+      val g = tally(e.name)
+      val shuffleStages = g.stages.size - g.jobs
+      val mb = math.rint(g.total(_.shufWriteB) / 1e4) / 100
+      val secs = math.rint(run.secs * 100) / 100
       sb.append(s"\n## ${e.name}\n\n${e.note}\n\n")
-      sb.append(s"- measured at `$sfDir`: ${counter.jobs.get} jobs, " +
-        s"${counter.stages.get} executed stages " +
+      sb.append(s"- measured at `$sfDir`: ${g.jobs} jobs, " +
+        s"${g.stages.size} executed stages " +
         s"(~$shuffleStages shuffle-map), $mb MB shuffle write, " +
-        s"$rows output rows, $secs s\n")
+        s"${run.rows} output rows, $secs s\n")
     }
+    spark.sparkContext.removeSparkListener(tally)
     streamingAudit(spark, sfDir, sb)
     Files.write(Paths.get("PLANS.md"),
       sb.toString.getBytes(StandardCharsets.UTF_8))
@@ -331,12 +306,9 @@ object PlanAudit {
       .option("maxFilesPerTrigger", 1).parquet(dir)
 
     def run(name: String, note: String, build: () => DataFrame,
-        outputMode: String, conf: Map[String, String] = Map.empty): Unit = {
-      val saved = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
-      conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+        outputMode: String, conf: Map[String, String] = Map.empty): Unit =
+      GraftSession.withConf(spark,
+          (conf + ("spark.sql.shuffle.partitions" -> "4")).toSeq: _*) {
         val viewName = "plan_audit_" +
           name.replaceAll("[^A-Za-z0-9_]", "").take(48)
         val q = build().writeStream.format("memory")
@@ -363,14 +335,7 @@ object PlanAudit {
             sb.append("\n```\n").append(stateful.mkString("\n")).append("\n```\n")
           }
         } finally q.stop()
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-        saved.foreach {
-          case (k, Some(v)) => spark.conf.set(k, v)
-          case (k, None) => spark.conf.unset(k)
-        }
       }
-    }
 
     run("stream_stream_interval_join (q_stream_join shape)",
       "Both sides watermarked; the join buffers each side in a " +

@@ -1,13 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility for the optimization rounds: write the FULL
   * `explain("formatted")` output of named gates to
   * `plans/<tag>/<name>_<suffix>.txt`, under the exact Bench session
-  * shape (local[$SPARK_GRAFT_CPUS], shuffle.partitions = cpus, AQE on,
-  * Hive + graft extensions) so the committed plan is the plan the
-  * bench actually runs.  Never used by the driver.
+  * shape ([[GraftSession.builder]]) so the committed plan is the plan
+  * the bench actually runs.  Never used by the driver.
   *
   * Usage: runMain graft.PlanDump <outDir> <suffix> <gate> [gate ...]
   */
@@ -16,16 +13,8 @@ object PlanDump {
     require(args.length >= 3, "usage: PlanDump <outDir> <suffix> <gate>...")
     val outDir = java.nio.file.Paths.get(args(0))
     val suffix = args(1)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.withHive(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val sfDir = GraftSession.sfDir
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(outDir)
     args.drop(2).foreach { name =>

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.lineage.ColumnLineage
 
 /** Hive-catalog surface through the driver contract: metastore table
@@ -62,9 +62,7 @@ object HiveQueries {
     // path).  Pruning is plan-asserted in `SourcesSpec`.
     "q_hive_partitioned" -> { (s, dir) =>
       Tables.registerAll(s, dir)
-      val dyn = s.conf.getOption("hive.exec.dynamic.partition.mode")
-      s.conf.set("hive.exec.dynamic.partition.mode", "nonstrict")
-      try {
+      GraftSession.withConf(s, "hive.exec.dynamic.partition.mode" -> "nonstrict") {
         s.sql("DROP TABLE IF EXISTS graft_hive_part")
         s.sql("""CREATE TABLE graft_hive_part (n_nationkey INT, n_name STRING)
                 |PARTITIONED BY (n_regionkey INT) STORED AS PARQUET""".stripMargin)
@@ -74,11 +72,6 @@ object HiveQueries {
                 |  CAST(sum(n_nationkey) AS BIGINT) AS key_sum
                 |FROM graft_hive_part WHERE n_regionkey IN (1, 3)
                 |GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin)
-      } finally dyn match {
-        // restore OR unset — foreach alone would leak the 'nonstrict'
-        // override into the shared session when the key started unset
-        case Some(v) => s.conf.set("hive.exec.dynamic.partition.mode", v)
-        case None    => s.conf.unset("hive.exec.dynamic.partition.mode")
       }
     },
 

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.lineage.ColumnLineage
 
 /** Lineage surfaced through the driver contract: compute the column
@@ -159,10 +159,8 @@ object LineageQueries {
       // 4 state-store partitions for the eager replay (the streaming-
       // gate convention: per-trigger cost is state-store instances, not
       // rows); the session default is restored after
-      val savedParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
       val graph =
-        try {
+        GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "4") {
           val q = joined.writeStream.format("memory")
             .queryName(s"lineage_stream_${streamRun.incrementAndGet()}")
             .outputMode("complete").start()
@@ -173,10 +171,7 @@ object LineageQueries {
             // fall back to the walk so the gate never races the bus
             listener.graphOf(q.runId)
               .getOrElse(graft.lineage.StreamingLineage.ofQuery(q))
-          } finally q.stop()
-        } finally {
-          s.conf.set("spark.sql.shuffle.partitions", savedParts)
-          s.streams.removeListener(listener)
+          } finally { q.stop(); s.streams.removeListener(listener) }
         }
       graph.toDF(s)
         .withColumn("src_table",

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Second Spark-4-era SQL-surface battery (companion to [[ModernSql]]):
   * engine features the 2.4-generation reference never had, each proven
@@ -143,10 +143,7 @@ object ModernSql4 {
     // the final SELECT is ordinary distributed SQL over customer.
     "q_sql_scripting" -> { (s, dir) =>
       Tables.registerAll(s, dir)
-      val key = "spark.sql.scripting.enabled"
-      val saved = s.conf.getOption(key)
-      s.conf.set(key, "true")
-      try s.sql(
+      GraftSession.withConf(s, "spark.sql.scripting.enabled" -> "true")(s.sql(
         """BEGIN
           |  DECLARE i INT DEFAULT 0;
           |  DECLARE key_acc BIGINT DEFAULT 0;
@@ -164,11 +161,7 @@ object ModernSql4 {
           |    SELECT 'none' AS c_mktsegment, CAST(0 AS BIGINT) AS n_above,
           |      key_acc AS loop_sum;
           |  END IF;
-          |END""".stripMargin)
-      finally saved match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
+          |END""".stripMargin))
     },
 
     // IDENTIFIER(): table name arrives as a bound string parameter —

@@ -133,11 +133,11 @@ object SqlSurface {
 
     // STORAGE-PARTITIONED JOIN (§2.3): two co-partitioned DSv2 scans
     // (KeyGroupedPartitioning on identity(k)) join with zero Exchange
-    // nodes (asserted in BucketedKvV2Spec); harmless no-op for every
-    // other entry's plan since only KeyGrouped scans consult the conf.
+    // nodes (asserted in BucketedKvV2Spec).  Spark 4 enables
+    // `spark.sql.sources.v2.bucketing.enabled` by default, so the gate
+    // sets no conf.
     "q_spj_join" -> { (s, dir) =>
       import org.apache.spark.sql.functions._
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
       def t(rowsPer: Int, mult: Int) =
         s.read.format("graft.sources.BucketedKvV2")
           .option("parts", 8).option("rowsPer", rowsPer).option("mult", mult).load()

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Batch reads over Structured Streaming STATE — Spark's `statestore`
   * DataSource (plus its `state-metadata` companion, spec-covered in
@@ -30,9 +30,7 @@ object StateStoreQueries {
 
   val queries: Map[String, Q] = Map(
     "q_statestore_read" -> { (s, dir) =>
-      val saved = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         val ev = Tables.events(s, dir)
           .select(col("user_id"), col("value"))
         val in = graft.TmpCleanup.tempDir("graft_ss_in")
@@ -59,7 +57,7 @@ object StateStoreQueries {
             col(s"value.${vf(0)}").cast("long").as("n"),
             col(s"value.${vf(1)}").cast("double").as("total"))
           .orderBy("user_id")
-      } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+      }
     })
 
   val oracle: Map[String, String] = Map(

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Structured Streaming surfaced through the CORRECTNESS gate: the
   * events table is replayed through a file stream in micro-batches,
@@ -32,11 +32,8 @@ object StreamingQueries {
     * inside `body` is affected (the lazy batch projection each entry
     * returns plans later, under the default).
     */
-  private[queries] def withStatePartitions[T](s: SparkSession)(body: => T): T = {
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try body finally s.conf.set("spark.sql.shuffle.partitions", saved)
-  }
+  private[queries] def withStatePartitions[T](s: SparkSession)(body: => T): T =
+    GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "4")(body)
 
   /** Write the (projected) events to a temp dir as `chunks` parquet
     * files and open a file stream over them, one file per micro-batch.
@@ -598,11 +595,8 @@ object StreamingQueries {
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
       val s2 = s
       import s2.implicits._
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val saved = s.conf.getOption(providerKey)
-      s.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      GraftSession.withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
         val ev = Tables.load(s, dir, "events")
           .filter(col("user_id") % 7 === 0 && col("event_type").isNotNull)
           .select(col("user_id"), col("event_type"), col("event_id"))
@@ -621,9 +615,6 @@ object StreamingQueries {
           .agg(max(col("types")).as("n_types"),
             max(col("total")).as("n_events"))
           .orderBy(col("user_id"))
-      } finally saved match {
-        case Some(v) => s.conf.set(providerKey, v)
-        case None => s.conf.unset(providerKey)
       }
     },
 
@@ -637,11 +628,8 @@ object StreamingQueries {
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
       val s2 = s
       import s2.implicits._
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val saved = s.conf.getOption(providerKey)
-      s.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      GraftSession.withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
         val ev = Tables.load(s, dir, "events")
           .select(col("event_type"), lit(1L).as("one"))
         val stream = replay(s, ev, chunks = 2).as[(String, Long)]
@@ -658,9 +646,6 @@ object StreamingQueries {
         s.table(name).groupBy(col("event_type"))
           .agg(max(col("total")).as("n_events"))
           .orderBy(col("event_type"))
-      } finally saved match {
-        case Some(v) => s.conf.set(providerKey, v)
-        case None => s.conf.unset(providerKey)
       }
     },
 

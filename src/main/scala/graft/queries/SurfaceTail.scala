@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Surface-tail battery: the remaining registry families without a
   * dedicated gate — the Spark-3.4+ regexp tail (reference regex family
@@ -92,15 +92,10 @@ object SurfaceTail {
     // 100 TB join would; confs restored either way.
     "q_runtime_bloom" -> { (s, dir) =>
       Tables.registerAll(s, dir)
-      val keys = Seq(
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "spark.sql.autoBroadcastJoinThreshold")
-      val saved = keys.map(k => k -> s.conf.getOption(k))
-      s.conf.set(keys(0), "10MB")
-      s.conf.set(keys(1), "1KB")
-      s.conf.set(keys(2), "-1")
-      try {
+      GraftSession.withConf(s,
+          "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "10MB",
+          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1KB",
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val joined = Tables.load(s, dir, "lineitem")
           .join(Tables.load(s, dir, "part").filter(col("p_size") === 1),
             col("l_partkey") === col("p_partkey"))
@@ -112,9 +107,6 @@ object SurfaceTail {
         val rows = joined.collect()
         import scala.jdk.CollectionConverters._
         s.createDataFrame(rows.toSeq.asJava, joined.schema)
-      } finally saved.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     },
 

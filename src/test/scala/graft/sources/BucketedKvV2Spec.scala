@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 
 /** Storage-partitioned-join contract tests for [[BucketedKvV2]]: with
   * v2 bucketing enabled, an equi-join of two co-partitioned scans on
@@ -25,16 +25,8 @@ class BucketedKvV2Spec extends SparkSpec {
       .orderBy("k")
   }
 
-  private def withBucketing[T](on: Boolean)(body: => T): T = {
-    val key = "spark.sql.sources.v2.bucketing.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, on.toString)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def withBucketing[T](on: Boolean)(body: => T): T =
+    GraftSession.withConf(spark, "spark.sql.sources.v2.bucketing.enabled" -> on.toString)(body)
 
   test("co-partitioned join plans zero Exchange nodes") {
     withBucketing(on = true) {
