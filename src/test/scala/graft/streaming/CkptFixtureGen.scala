@@ -15,11 +15,18 @@ import org.apache.spark.sql.SparkSession
   *   sbt "Test/runMain graft.streaming.CkptFixtureGen"
   * then commit the regenerated resources.
   *
-  * The source directory is a FIXED absolute path: the file-source
-  * offset log records absolute file paths, so the consuming test must
-  * recreate the exact same files at the exact same location.  The
-  * checkpoint itself is relocatable (offsets reference the source, not
-  * the checkpoint root).
+  * The source directory is a FIXED absolute path: the file-source log
+  * (`ckpt/sources/0/`) pins each file by its absolute path AND its
+  * modification time, so a consumer must recreate the exact same files
+  * at the exact same location and then set each file's mtime back to
+  * the `timestamp` the log records for it.  Neither git nor
+  * [[copyTree]] keeps mtimes.  After each batch `FileStreamSource`
+  * forgets log entries older than the newest file's timestamp minus
+  * `maxFileAge` (default 7 days); a forgotten file whose mtime is
+  * fresh is then listed as new, so without the restored mtime batch 0
+  * is replayed once the fixture is a week old.  The checkpoint itself
+  * is relocatable (offsets reference the source, not the checkpoint
+  * root).
   */
 object CkptFixtureGen {
   val SrcDir = "/tmp/graft_ckpt_fixture_src"

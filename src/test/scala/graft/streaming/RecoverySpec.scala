@@ -1,7 +1,11 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.FileTime
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
@@ -62,10 +66,30 @@ class RecoverySpec extends SparkSpec {
     val fixture = new File(ResDir).toPath
     assert(Files.exists(fixture), s"committed fixture missing at $ResDir")
 
-    // the file-source offset log records absolute paths: recreate the
-    // source dir byte-for-byte at the pinned location
-    deleteRecursively(new File(SrcDir).toPath)
-    copyTree(fixture.resolve("src"), new File(SrcDir).toPath)
+    // the file-source log pins each file by absolute path AND
+    // modification time: recreate the source dir byte-for-byte at the
+    // pinned location, then give each file back the mtime the log
+    // recorded.  Neither a git checkout nor copyTree keeps mtimes, and
+    // after a batch FileStreamSource forgets log entries older than the
+    // newest file minus maxFileAge (7 days); a file left with a fresh
+    // mtime then counts as new and batch 0 is replayed once the fixture
+    // is a week old.
+    val srcDir = new File(SrcDir).toPath
+    deleteRecursively(srcDir)
+    copyTree(fixture.resolve("src"), srcDir)
+    val logged = RecoverySpec.loggedFileTimes(fixture.resolve("ckpt/sources/0"))
+    assert(logged.nonEmpty, "fixture's file-source log lists no files")
+    // precondition read the way the query reads it: through the
+    // session's Hadoop FileSystem for file:
+    val fs = new org.apache.hadoop.fs.Path(srcDir.toUri)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    logged.foreach { case (name, ts) =>
+      val f = srcDir.resolve(name)
+      assert(Files.exists(f), s"logged source file $name not in the fixture's src/")
+      Files.setLastModifiedTime(f, FileTime.fromMillis(ts))
+      val mtime = fs.getFileStatus(new org.apache.hadoop.fs.Path(f.toUri)).getModificationTime
+      assert(mtime == ts, s"recreated $name has mtime $mtime, the checkpoint logged $ts")
+    }
     // the checkpoint itself is relocatable — restart from a copy so the
     // committed resources are never mutated
     val ckpt = Files.createTempDirectory("graft_ckpt_fixture_run")
@@ -79,17 +103,29 @@ class RecoverySpec extends SparkSpec {
       .schema("k STRING, v LONG").parquet(SrcDir)
       .groupBy($"k").count()
     val emitted = new java.util.concurrent.ConcurrentHashMap[String, Long]()
+    val byBatch = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Long)]()
     val q = counts.writeStream
       .option("checkpointLocation", ckpt.toString)
       .outputMode("update")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        batch.collect().foreach(r => emitted.put(r.getString(0), r.getLong(1)))
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        batch.collect().foreach { r =>
+          emitted.put(r.getString(0), r.getLong(1))
+          byBatch.add((batchId, r.getString(0), r.getLong(1)))
+        }
         ()
       }
       .start()
     try q.processAllAvailable() finally q.stop()
 
-    val rows = { import scala.jdk.CollectionConverters._; emitted.asScala.toMap }
+    // the restarted run has exactly one batch of input, batch 1; rows
+    // from any later batch mean a committed file was read again
+    val others = byBatch.asScala.toSeq.filter(_._1 != 1L)
+    assert(others.isEmpty, "restarted run emitted rows outside batch 1: " +
+      others.groupBy(_._1).toSeq.sortBy(_._1)
+        .map { case (b, rs) => s"batch $b -> ${rs.map(r => s"${r._2}=${r._3}").mkString(", ")}" }
+        .mkString("; "))
+
+    val rows = emitted.asScala.toMap
     // a = 2 (from recovered state) + 1 new row — proves the committed
     // deltas were loaded, not recomputed from a replay
     assert(rows.get("a").contains(3L), s"state not recovered: $rows")
@@ -97,5 +133,25 @@ class RecoverySpec extends SparkSpec {
     // update-mode output of the restarted run carries only keys touched
     // by batch 1; a 'b' row would mean batch 0 was reprocessed
     assert(!rows.contains("b"), s"committed batch was replayed: $rows")
+  }
+}
+
+object RecoverySpec {
+  /** File name → modification time (epoch ms) as a file-source log
+    * (`<ckpt>/sources/<n>/`) records them: each log file is a `v1`
+    * header line followed by one JSON entry per file.
+    */
+  def loggedFileTimes(logDir: Path): Map[String, Long] = {
+    val mapper = new ObjectMapper()
+    val logs = Files.list(logDir)
+    try logs.iterator().asScala.toSeq
+      .filterNot(_.getFileName.toString.startsWith("."))
+      .flatMap(f => Files.readAllLines(f).asScala.drop(1).filter(_.trim.nonEmpty))
+      .map { line =>
+        val e = mapper.readTree(line)
+        val name = Paths.get(new java.net.URI(e.get("path").asText)).getFileName.toString
+        name -> e.get("timestamp").asLong
+      }.toMap
+    finally logs.close()
   }
 }
