@@ -187,11 +187,6 @@ object Bench {
       .find(_._1.length <= max)
       .getOrElse((render(Nil), entries.size))
 
-  /** Entries echoed individually on the stdout summary line: the TPC-H
-    * battery plus the operators whose cost profile matters most
-    * (dedup/ANN/streaming/gates).  Everything else is still timed and
-    * lands in BENCH_FULL.json + the aggregate fields.
-    */
   /** Protocol-constant entries: gates that drive a Structured
     * Streaming replay (or read its state store) carry a fixed 2-8 s
     * streaming-query startup + micro-batch-protocol cost that does NOT
@@ -205,6 +200,11 @@ object Bench {
       name == "q_dsv2_stream" ||
       name == "q_statestore_read" || name == "q_lineage_stream"
 
+  /** Entries echoed individually on the stdout summary line: the TPC-H
+    * battery plus the operators whose cost profile matters most
+    * (dedup/ANN/streaming/gates).  Everything else is still timed and
+    * lands in BENCH_FULL.json + the aggregate fields.
+    */
   private def isHeadline(name: String): Boolean =
     name.matches("q\\d\\d_.*") || Set(
       "q_dedup_exact", "q_dedup_minhash", "q_dup_clusters", "q_kmeans",
