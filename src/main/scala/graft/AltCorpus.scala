@@ -28,6 +28,10 @@ import org.apache.spark.sql.functions._
   *    perturb, recall floors must hold on structure, not memorized
   *    ranks); labels permute;
   *  - row order is re-shuffled by hash (partition layouts change).
+  *
+  * Usage: runMain graft.AltCorpus <srcDir> <outDir> [seed=1337] [skew]
+  * (the session is `GraftSession.builder()`'s, on `SPARK_GRAFT_CPUS`
+  * cores).
   */
 object AltCorpus {
 
@@ -36,12 +40,7 @@ object AltCorpus {
     val out = if (args.length > 1) args(1) else "/tmp/sf0.01-alt"
     val seed = if (args.length > 2) args(2).toLong else 1337L
     val skew = args.length > 3 && args(3) == "skew"
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     write(spark, src, out, seed, skew)
     println(s"ALT CORPUS written: $out (seed=$seed, skew=$skew)")

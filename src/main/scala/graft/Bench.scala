@@ -1,7 +1,13 @@
 package graft
 
-import scala.collection.mutable
+import java.nio.file.{Files, Paths}
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import scala.sys.process.{Process, ProcessLogger}
+import scala.util.Try
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftbridge.ListenerBridge
@@ -12,41 +18,41 @@ import org.apache.spark.sql.graftbridge.ListenerBridge
   * SPARK_GRAFT_BENCH_RUNS); the per-entry statistic is the MEDIAN, so a
   * single shared-host hiccup can't masquerade as a regression.  A
   * failing entry is never silently timed: its error (first line) is
-  * recorded and surfaced in the `errs` count and the detail file.
+  * recorded and surfaced in the `errs` count and the record.
   *
-  * Output contract:
-  *  - stdout: ONE compact JSON line (summary + headline-entry medians),
-  *    HARD-BOUNDED to ≤ 1,900 chars — the driver captures a 2,000-char
-  *    output tail, and the r15/r16 lines (~2,070+) lost their opening
-  *    chars to that capture, zeroing the driver's bench parse for two
-  *    rounds.  Optional list fields are capped (full versions in
-  *    BENCH_SUMMARY.json); metric/value/unit/sf are never dropped, and
-  *    the headline `queries` map loses entries from its end (with a
-  *    stderr warning) only if the most compact line still overflows
-  *    ([[fitLine]]).
-  *  - ./BENCH_FULL.json: {entry: {"median": s, "runs": [...], "err":
-  *    null|"..."}} for EVERY entry — the complete record the summary
-  *    line is derived from.
+  * Output:
+  *  - stdout: the summary as ONE JSON line starting `{"metric":"total"`.
+  *  - ./BENCH_FULL.json (full runs only): the record — the run's
+  *    [[Key]], the git rev, the summary, and {entry: {"median": s,
+  *    "runs": [...], "err": null|"..."}} for EVERY entry.
+  *  - ./BENCH_SCALING.json and ./BENCH_SCALING_UP.json: the two ladder
+  *    records (below), under the same key and rev.
+  *
+  * A timing depends on the corpus, the core count and the timed action,
+  * so every record starts with a [[Key]] of those three, and the
+  * regression guard compares only records whose keys are equal
+  * ([[regressions]]); any other pair is refused, and the summary says
+  * why.
   *
   * A warmup pass (table file-index + codegen + JIT on a trivial action
   * per table) runs before timing; queries run in sorted name order for
   * run-to-run comparability.  Every timed run goes through [[runGate]];
   * a warmup that fails says so on stderr.
   *
-  * A subset run (`SPARK_GRAFT_BENCH_ONLY`) also prints, before the
-  * summary line, each gate's execution profile from the timed passes:
-  * median wall, and per pass the jobs, executed stages, tasks, executor
-  * and GC time and shuffle volume, then its 8 stages with the most
-  * executor time ([[Tally]]).
+  * A subset run (`SPARK_GRAFT_BENCH_ONLY`) writes no BENCH_FULL.json;
+  * instead it prints, before the summary line, each gate's execution
+  * profile from the timed passes: median wall, and per pass the jobs,
+  * executed stages, tasks, executor and GC time and shuffle volume,
+  * then its 8 stages with the most executor time ([[Tally]]).
   *
   * Entries are reported in two CLASSES: data-scaling gates and
   * protocol-constant streaming-replay gates ([[isProtocol]]), with
   * separate totals, `slowest` lists, and flag thresholds.  Any entry
-  * flagged as a regression or baseline delta is RE-MEASURED in
-  * isolation at the end of the session and the flag survives only if
-  * the isolated median still clears the threshold — mid-session
-  * interference (the round-10 q_retention_fit false flag) dies at the
-  * gate instead of costing a judge adjudication.
+  * flagged as a regression is RE-MEASURED in isolation at the end of
+  * the session and the flag survives only if the isolated median still
+  * clears the threshold — mid-session interference (the round-10
+  * q_retention_fit false flag) dies at the gate instead of costing a
+  * judge adjudication.
   */
 object Bench {
   /** Local property naming the gate whose jobs a thread submits: set by
@@ -56,6 +62,9 @@ object Bench {
 
   /** One finished run of a gate: wall seconds and result row count. */
   final case class Timed(secs: Double, rows: Long)
+
+  /** The action [[runGate]] times, as recorded in every [[Key]]. */
+  private[graft] val Action = "count"
 
   /** One timed run of gate `name` over corpus `dir`: tag the thread's
     * jobs with the gate, time `fn(spark, dir).count()` (the gate's build
@@ -176,17 +185,6 @@ object Bench {
       }
   }
 
-  /** `render(entries.take(n))` for the largest `n` whose line fits in
-    * `max` chars, and the number of entries dropped from the end to get
-    * there (all of them, if not even the empty render fits).
-    */
-  private[graft] def fitLine(render: Seq[String] => String,
-      entries: Seq[String], max: Int): (String, Int) =
-    (entries.size to 0 by -1).iterator
-      .map(n => (render(entries.take(n)), entries.size - n))
-      .find(_._1.length <= max)
-      .getOrElse((render(Nil), entries.size))
-
   /** Protocol-constant entries: gates that drive a Structured
     * Streaming replay (or read its state store) carry a fixed 2-8 s
     * streaming-query startup + micro-batch-protocol cost that does NOT
@@ -200,29 +198,82 @@ object Bench {
       name == "q_dsv2_stream" ||
       name == "q_statestore_read" || name == "q_lineage_stream"
 
-  /** Entries echoed individually on the stdout summary line: the TPC-H
-    * battery plus the operators whose cost profile matters most
-    * (dedup/ANN/streaming/gates).  Everything else is still timed and
-    * lands in BENCH_FULL.json + the aggregate fields.
+  /** What a record's timings were measured on: the corpus fingerprint
+    * ([[fingerprint]]), the session's `defaultParallelism` and the timed
+    * [[Action]].  Two records compare only when their keys are equal.
     */
-  private def isHeadline(name: String): Boolean =
-    name.matches("q\\d\\d_.*") || Set(
-      "q_dedup_exact", "q_dedup_minhash", "q_dup_clusters", "q_kmeans",
-      "q_knn_brute", "q_knn_ivf", "q_contamination", "q_seq_packing",
-      "q_skew_salted", "q_stream_tumbling", "q_stream_dedup",
-      "q_stream_join", "q_setops", "q_orc_roundtrip", "q_topk_per_key",
-      "q_multimodal", "q_typed_mapgroups", "q_window_rank",
-      "q_hive_roundtrip", "qds_q72_nine_way_lag", "q_sketch_hll",
-      "q_dedup_minhash_recall", "q_dpp_join", "q_runtime_bloom",
-      "q_zorder_code", "q_recursive_cte", "q_sql_scripting",
-      "q_quality_checks", "q_drift_psi", "q_table_diff",
-      "q_stream_foreachbatch_merge").contains(name)
+  final case class Key(corpus: String, cpus: Int, action: String) {
+    def json: String =
+      s"""{"corpus":${jq(corpus)},"cpus":$cpus,"action":${jq(action)}}"""
+  }
+
+  /** The corpus under `dir` as a hash of its sorted relative file names
+    * and sizes (`absent` if there is no such dir): a regenerated corpus
+    * gets a new fingerprint.
+    */
+  def fingerprint(dir: String): String = {
+    val root = Paths.get(dir)
+    if (!Files.exists(root)) "absent"
+    else {
+      val walk = Files.walk(root)
+      try {
+        val entries = walk.iterator().asScala
+          .filter(Files.isRegularFile(_))
+          .map(p => root.relativize(p).toString + ":" + Files.size(p))
+          .toSeq.sorted
+        java.lang.Long.toHexString(entries.foldLeft(1125899906842597L) {
+          (h, s) => s.foldLeft(h)((a, c) => a * 31 + c)
+        })
+      } finally walk.close()
+    }
+  }
+
+  /** Per-class flag thresholds: protocol constants wobble with scheduler
+    * timing, so they flag only at 2×/1s; data entries at 1.5×/0.2s.
+    */
+  private def overThreshold(n: String, base: Double, cur: Double): Boolean =
+    if (isProtocol(n)) cur > base * 2.0 && cur - base > 1.0
+    else cur > base * 1.5 && cur - base > 0.2
+
+  /** The regression guard: the gates of `med` (fresh medians) that are
+    * over their threshold against the previous record `prev` (a
+    * BENCH_FULL.json text), as (gate, previous, fresh), worst ratio
+    * first.  Left is why the two cannot be compared: `no key`, the first
+    * [[Key]] field that differs, or an unreadable record.
+    */
+  private[graft] def regressions(prev: String, key: Key,
+      med: Map[String, Double]): Either[String, Seq[(String, Double, Double)]] =
+    Try(new ObjectMapper().readTree(prev)).toEither
+      .left.map(e => s"unreadable: ${firstLine(e)}")
+      .flatMap { root =>
+        val k = root.path("key")
+        if (!k.isObject) Left("no key")
+        else Seq("corpus" -> key.corpus, "cpus" -> key.cpus.toString, "action" -> key.action)
+          .collectFirst { case (f, v) if k.path(f).asText() != v =>
+            s"$f differs (${k.path(f).asText()} vs $v)" }
+          .toLeft(root.path("gates").properties().asScala
+            .map(e => e.getKey -> e.getValue.path("median").asDouble(-1)).toMap)
+      }
+      .map { base =>
+        med.toSeq.flatMap { case (n, cur) =>
+          base.get(n).filter(b => b > 0 && overThreshold(n, b, cur)).map((n, _, cur))
+        }.sortBy { case (_, b, c) => -(c / b) }
+      }
+
+  private def jq(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 
   def main(args: Array[String]): Unit = {
     val sfDir = GraftSession.sfDir
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val key = Key(fingerprint(sfDir), spark.sparkContext.defaultParallelism, Action)
+    val rev = Try(Process(Seq("git", "rev-parse", "HEAD")).!!(ProcessLogger(_ => ())).trim)
+      .getOrElse("unknown")
+    def writeRecord(file: String, fields: (String, String)*): Unit =
+      Files.writeString(Paths.get(file),
+        (Seq("key" -> key.json, "rev" -> jq(rev)) ++ fields)
+          .map { case (k, v) => s"${jq(k)}: $v" }.mkString("{\n", ",\n", "\n}\n"))
     warmTables(spark, sfDir)
     // SPARK_GRAFT_BENCH_ONLY: comma-separated name prefixes — isolated
     // re-measurement of specific entries (regression triage) without
@@ -282,91 +333,12 @@ object Bench {
     val slowest = okData.sortBy(-med(_)).take(5)
     val slowestProto = okProto.sortBy(-med(_)).take(3)
 
-    // per-entry regression guard: read the PREVIOUS run's medians
-    // (BENCH_FULL.json about to be overwritten, or an explicit
-    // SPARK_GRAFT_BENCH_PREV path) and surface entries that got
-    // >1.5× slower with >0.2s absolute drift — machine-visible at the
-    // gate instead of judge-discovered
-    val prevPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", "BENCH_FULL.json"))
-    val prev: Map[String, Double] =
-      if (java.nio.file.Files.exists(prevPath)) {
-        val txt = java.nio.file.Files.readString(prevPath)
-        val re = """"([^"]+)":\s*\{"median":(-?[0-9.eE+]+)""".r
-        re.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } else Map.empty
-    // per-class thresholds: protocol constants wobble with scheduler
-    // timing, so they flag only at 2×/1s; data entries keep 1.5×/0.2s
-    def overThreshold(n: String, base: Double, cur: Double): Boolean =
-      if (isProtocol(n)) cur > base * 2.0 && cur - base > 1.0
-      else cur > base * 1.5 && cur - base > 0.2
-    // Baseline-HISTORY deltas get a higher absolute floor (0.3 s): the
-    // history keeps the MIN over every session median and isolated
-    // retest across rounds, so on a 0.3 s-class entry it converges to
-    // the lucky tail of the ±0.2 s machine-noise envelope and a normal
-    // median eventually "flags" with no code change (round 12:
-    // qssb_q2_brand_range best 0.17 vs 8 rounds of medians at
-    // 0.23-0.45 s).  Round-over-round regressions keep the tighter
-    // floor — both sides of that comparison are same-kind medians.
-    def overBaseline(n: String, base: Double, cur: Double): Boolean =
-      if (isProtocol(n)) cur > base * 2.0 && cur - base > 1.0
-      else cur > base * 1.5 && cur - base > 0.3
-    val regressions0 = ok.flatMap { n =>
-      prev.get(n).filter(p => p > 0 && overThreshold(n, p, med(n)))
-        .map(p => (n, p, med(n)))
-    }.sortBy { case (_, p, c) => -(c / p) }
-
-    // baseline-history guard: refreshing BENCH_FULL.json must not
-    // launder slow drift (a regression vs round N-3 hides if every
-    // round re-baselines on round N-1).  BENCH_BASELINE_HISTORY.json
-    // keeps the BEST-KNOWN median per entry across every full run;
-    // `baseline_deltas` surfaces entries whose fresh median is >1.5×
-    // (and >0.2s over) that best — machine-visible drift even when the
-    // round-over-round `regressions` field is clean.
-    //
-    // Bests are keyed to a FINGERPRINT of the testdata (sorted relative
-    // file names + sizes): the corpus regenerates between rounds, and a
-    // best measured on last round's data is not a baseline for this
-    // round's — those stale flags (q_stat_quantile/q_pagerank carried
-    // "data-regen artifact" notes for two rounds) drowned real drift.
-    // On a fingerprint change the history restarts; within one data
-    // generation every full run still tightens and checks the bests.
-    def jq(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val fingerprint: String = {
-      val root = java.nio.file.Paths.get(sfDir)
-      if (!java.nio.file.Files.exists(root)) "absent"
-      else {
-        val walk = java.nio.file.Files.walk(root)
-        try {
-          import scala.jdk.CollectionConverters._
-          val entries = walk.iterator().asScala
-            .filter(java.nio.file.Files.isRegularFile(_))
-            .map(p => root.relativize(p).toString + ":" +
-              java.nio.file.Files.size(p))
-            .toSeq.sorted
-          java.lang.Long.toHexString(entries.foldLeft(1125899906842597L) {
-            (h, s) => s.foldLeft(h)((a, c) => a * 31 + c)
-          })
-        } finally walk.close()
-      }
-    }
-    val histPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_HISTORY", "BENCH_BASELINE_HISTORY.json"))
-    val hist: Map[String, Double] =
-      if (java.nio.file.Files.exists(histPath)) {
-        val txt = java.nio.file.Files.readString(histPath)
-        val fpRe = """"__fingerprint__":\s*"([^"]+)"""".r
-        val sameData = fpRe.findFirstMatchIn(txt).exists(_.group(1) == fingerprint)
-        if (!sameData) Map.empty
-        else {
-          val re = """"([^"]+)":\s*(-?[0-9.eE+]+)""".r
-          re.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }
-      } else Map.empty
-    val baselineDeltas0 = ok.flatMap { n =>
-      hist.get(n).filter(b => b > 0 && overBaseline(n, b, med(n)))
-        .map(b => (n, b, med(n)))
-    }.sortBy { case (_, b, c) => -(c / b) }
+    // per-entry regression guard against the previous full-run record
+    val prevPath = Paths.get("BENCH_FULL.json")
+    val flags =
+      if (!Files.exists(prevPath)) Left("no previous record")
+      else regressions(Files.readString(prevPath), key, ok.map(n => n -> med(n)).toMap)
+    flags.left.foreach(r => System.err.println(s"[bench] regressions not compared: $r"))
 
     // Isolated-retest pass (the CLAUDE.md protocol, mechanized): a
     // median collected mid-session is contaminated by GC/page-cache
@@ -376,42 +348,25 @@ object Bench {
     // the session; a flag survives only if the isolated median still
     // clears the threshold, and the surviving flag reports the
     // isolated (defensible) number, not the contaminated one.
-    val retested = mutable.Map.empty[String, Double]
-    def retest(n: String): Double = retested.getOrElseUpdate(n, {
+    def retest(n: String): Double = {
       // A sample that throws is DROPPED, not mapped to MaxValue: a
       // poisoned median would trivially clear overThreshold and report
       // ~1.8e308 as the "defensible" number.  All-samples-failed →
-      // -1 sentinel; confirm() falls back to the session median.
+      // -1 sentinel; the session median stands.
       val ts = (0 until math.max(3, runs))
         .flatMap(_ => runGate(spark, n, sfDir).toOption.map(_.secs))
       if (ts.isEmpty) -1.0 else r3(median(ts))
-    })
-    def confirm(flags: Seq[(String, Double, Double)],
-        thresh: (String, Double, Double) => Boolean) =
-      flags.take(12).flatMap { case (n, base, cur) =>
-        val iso0 = retest(n)
-        // retest errored entirely (-1 sentinel): keep the contaminated
-        // session median as the reported measurement.  Strictly < 0 —
-        // a sub-millisecond retest median r3-rounds to exactly 0.0 and
-        // is a valid (fast) measurement, not a failure.
-        val iso = if (iso0 < 0) cur else iso0
-        if (thresh(n, base, iso)) Some((n, base, iso)) else None
-      }
-    val regressions = confirm(regressions0, overThreshold)
-    val baselineDeltas = confirm(baselineDeltas0, overBaseline)
-    if (only.isEmpty) {
-      // subset runs never update history: an isolated re-measurement is
-      // a DIAGNOSTIC of the recorded number, not a replacement for it
-      val merged = (hist.keySet ++ ok).toSeq.sorted.map { n =>
-        val best = (hist.get(n).toSeq ++
-          (if (med.getOrElse(n, -1.0) > 0) Seq(med(n)) else Nil) ++
-          retested.get(n).filter(_ > 0)).min
-        s"${jq(n)}: $best"
-      }
-      java.nio.file.Files.writeString(histPath,
-        (s""""__fingerprint__": "$fingerprint"""" +: merged)
-          .mkString("{\n", ",\n", "\n}"))
     }
+    val regressionsField = flags.map(_.take(12).flatMap { case (n, base, cur) =>
+      val iso0 = retest(n)
+      // retest errored entirely (-1 sentinel): keep the contaminated
+      // session median as the reported measurement.  Strictly < 0 —
+      // a sub-millisecond retest median r3-rounds to exactly 0.0 and
+      // is a valid (fast) measurement, not a failure.
+      val iso = if (iso0 < 0) cur else iso0
+      if (overThreshold(n, base, iso)) Some((n, base, iso)) else None
+    }).fold(r => jq(s"not compared: $r"),
+      _.map { case (n, p, c) => s"[${jq(n)},$p,$c]" }.mkString("[", ",", "]"))
     // ── Scale ladder: MEASURED per-gate scaling exponents ──
     // The 100 TB argument is plan-shape + bounded-collect reasoning;
     // this makes it empirical per round: every data-class gate is
@@ -436,8 +391,8 @@ object Bench {
     // before surfacing (the `regressions` protocol).  Protocol-class
     // gates are excluded: their cost IS the fixed streaming-replay
     // constant.  Full table → BENCH_SCALING.json (both exponents).
-    val scalingEnabled = only.isEmpty &&
-      sys.env.getOrElse("SPARK_GRAFT_SCALING", "1") != "0"
+    // Every full run over an sf0.1 dir with sf0.001 and sf0.01 siblings
+    // runs the ladder.
     def timeOnce(n: String, dir: String): Option[Double] =
       runGate(spark, n, dir).toOption.map(_.secs)
     /** (rawExp, adjustedExp, topRungVariableTime) */
@@ -449,12 +404,12 @@ object Bench {
       val v10 = math.max(hi - fixed, 1e-3)
       (raw, math.log10(v10 / v1), hi - fixed)
     }
-    val scalingBlock: String = if (!scalingEnabled) """{"enabled":false}"""
+    val scalingBlock: String = if (only.nonEmpty) """{"enabled":false}"""
     else {
-      val base = java.nio.file.Paths.get(sfDir).toAbsolutePath
+      val base = Paths.get(sfDir).toAbsolutePath
       def rung(l: String): Option[String] =
         Option(base.getParent).map(_.resolve(l))
-          .filter(java.nio.file.Files.isDirectory(_)).map(_.toString)
+          .filter(Files.isDirectory(_)).map(_.toString)
       (rung("sf0.001"), rung("sf0.01")) match {
         case (Some(d001), Some(d01))
             if base.getFileName.toString == "sf0.1" =>
@@ -518,9 +473,7 @@ object Bench {
                 s"\"t_sf0_1\":${r3(hi)},\"raw_exponent\":${r3(raw)}," +
                 s"\"adjusted_exponent\":${r3(adj)}$isoFields}"
           }
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get("BENCH_SCALING.json"),
-            rows.mkString("{\n", ",\n", "\n}"))
+          writeRecord("BENCH_SCALING.json", "gates" -> rows.mkString("{\n", ",\n", "\n}"))
           // headline number: worst RAW exponent among gates with
           // MATERIAL top-rung variable time (the sound lower bound) —
           // POST-ISOLATION where an isolated ladder exists, so the
@@ -548,15 +501,17 @@ object Bench {
     // iterative graph/suffix ops' constants start to matter.  Opt-in
     // via SPARK_GRAFT_SF3_DIR; the 15 slowest data gates are re-timed
     // with 3-run medians at sf0.1 and the up rung, the exponent
-    // normalized by the ×3 data step (log base = factor).  Per-gate
+    // normalized by the data step (log base = factor, the ratio of the
+    // two corpora's lineitem row counts: ScaleCorpus replicates every
+    // lineitem row exactly k times).  Per-gate
     // table → BENCH_SCALING_UP.json; same flag bar as the main ladder
     // (exponent > 1.05 with material top-rung time).
     val upRungBlock: String = sys.env.get("SPARK_GRAFT_SF3_DIR")
-      .filter(d => java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(d)))
+      .filter(d => Files.isDirectory(Paths.get(d)))
       .map { d3 =>
         warmTables(spark, d3)
-        val factor = sys.env.getOrElse("SPARK_GRAFT_SF3_FACTOR", "3").toDouble
+        val factor = Tables.load(spark, d3, "lineitem").count().toDouble /
+          Tables.load(spark, sfDir, "lineitem").count()
         val slow15 = okData.sortBy(n => -med(n)).take(15)
         val rows = slow15.flatMap { n =>
           val t1s = (0 until 3).flatMap(_ => timeOnce(n, sfDir))
@@ -573,8 +528,7 @@ object Bench {
           s"${jq(n)}: {\"t_sf0_1\":${r3(m1)},\"t_up\":${r3(m3)}," +
             s"\"up_raw_exponent\":${r3(e)}}"
         }.mkString("{\n", ",\n", "\n}")
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get("BENCH_SCALING_UP.json"), body)
+        writeRecord("BENCH_SCALING_UP.json", "factor" -> factor.toString, "gates" -> body)
         val maxE = r3(rows.map(_._4).maxOption.getOrElse(0.0))
         val fl = rows.filter(r => r._4 > 1.05 && r._3 > 0.5)
           .map { case (n, m1, m3, e) =>
@@ -590,78 +544,13 @@ object Bench {
       val e = errs.get(n).map(jq).getOrElse("null")
       s"${jq(n)}: {\"median\":${med(n)},\"runs\":$rs,\"err\":$e}"
     }.mkString("{\n", ",\n", "\n}")
-    // isolated subset runs (BENCH_ONLY) must not clobber the full-run
-    // medians the regression guard diffs against
-    val detailPath = if (only.isEmpty) "BENCH_FULL.json" else "BENCH_SUBSET.json"
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath), detail)
-
-    // compact summary line (bounded size: headline medians only)
-    val headline = names.filter(isHeadline).map(n => s"${jq(n)}:${med(n)}")
-    val totalData = r3(okData.map(med).sum)
-    val totalProto = r3(okProto.map(med).sum)
+    def pairs(ns: Seq[String]) = ns.map(n => s"[${jq(n)},${med(n)}]").mkString("[", ",", "]")
     val errCount = errs.size
-    // The stdout line is parsed from a BOUNDED (2,000-char) captured
-    // tail by the driver; the r15/r16 lines were ~2,070-2,250 chars and
-    // the opening `{"metric":...` fell off the capture, zeroing every
-    // driver-side bench field for two rounds (r16 verdict item 3).  Fix
-    // (a MEASUREMENT-REPORTING bug fix, not a methodology change — the
-    // timed action and statistics are untouched): the uncapped record
-    // goes to BENCH_SUMMARY.json, while the printed line caps each
-    // optional list and, if ever still over budget, drops optional
-    // fields in documented priority order.  metric/value/unit/sf are
-    // never dropped; headline entries go last, from the end of the map.
-    def assemble(slowN: Int, protoN: Int, flagN: Int,
-        scalingStr: String, upStr: String, heads: Seq[String] = headline): String = {
-      val qs = heads.mkString("{", ",", "}")
-      val slow = slowest.take(slowN).map(n => s"[${jq(n)},${med(n)}]")
-        .mkString("[", ",", "]")
-      val slowProto = slowestProto.take(protoN)
-        .map(n => s"[${jq(n)},${med(n)}]").mkString("[", ",", "]")
-      val regr = regressions.take(flagN)
-        .map { case (n, p, c) => s"[${jq(n)},$p,$c]" }.mkString("[", ",", "]")
-      val deltas = baselineDeltas.take(flagN)
-        .map { case (n, b, c) => s"[${jq(n)},$b,$c]" }.mkString("[", ",", "]")
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","runs":$runs,"agg":"median","entries":${names.size},"errs":$errCount,"total_data":$totalData,"total_protocol":$totalProto,"regressions":$regr,"regressions_n":${regressions.size},"baseline_deltas":$deltas,"baseline_deltas_n":${baselineDeltas.size},"slowest":$slow,"slowest_protocol":$slowProto,"scaling":$scalingStr,"up_rung":$upStr,"queries":$qs,"detail":"$detailPath"}"""
-    }
-    // compact single-number views of the two ladder blocks (full JSON
-    // objects stay in BENCH_SUMMARY.json + their own detail files)
-    val scalingCompact = {
-      val re = """"max_material_raw_exponent":(-?[0-9.eE+]+)""".r
-      re.findFirstMatchIn(scalingBlock).map(m =>
-        s"""{"max_material_raw_exponent":${m.group(1)},"detail":"BENCH_SCALING.json"}""")
-        .getOrElse(scalingBlock)
-    }
-    val upCompact = {
-      val re = """"max_up_exponent":(-?[0-9.eE+]+)""".r
-      re.findFirstMatchIn(upRungBlock).map(m =>
-        s"""{"max_up_exponent":${m.group(1)},"detail":"BENCH_SCALING_UP.json"}""")
-        .getOrElse(upRungBlock)
-    }
-    val summaryFull = assemble(5, 3, 10, scalingBlock, upRungBlock)
-    val summaryLine0 = assemble(4, 2, 4, scalingCompact, upCompact)
-    val summaryLine =
-      if (summaryLine0.length <= 1900) summaryLine0
-      else {
-        val s1 = assemble(2, 1, 2, scalingCompact, upCompact)
-        if (s1.length <= 1900) s1
-        else {
-          val (line, dropped) = fitLine(
-            assemble(0, 0, 1, scalingCompact, upCompact, _), headline, 1900)
-          if (dropped > 0)
-            System.err.println(s"[bench] summary line over 1900 chars: dropped " +
-              s"the last $dropped of ${headline.size} headline entries " +
-              "(all of them are in BENCH_SUMMARY.json)")
-          line
-        }
-      }
-    println(summaryLine)
-    // sbt prefixes stdout with "[info] ", which has tripped stdout-line
-    // parsers before (r6 driver artifact recorded parsed:null) — also
-    // persist the summary where a file read needs no log scraping.
-    // BENCH_SUMMARY.json carries the UNCAPPED record (full slowest/
-    // flag lists + full scaling blocks).
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_SUMMARY.json"), summaryFull)
+    val summary = s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","runs":$runs,"agg":"median","entries":${names.size},"errs":$errCount,"total_data":${r3(okData.map(med).sum)},"total_protocol":${r3(okProto.map(med).sum)},"regressions":$regressionsField,"slowest":${pairs(slowest)},"slowest_protocol":${pairs(slowestProto)},"scaling":$scalingBlock,"up_rung":$upRungBlock}"""
+    println(summary)
+    // isolated subset runs (BENCH_ONLY) must not clobber the full-run
+    // record the regression guard diffs against
+    if (only.isEmpty) writeRecord("BENCH_FULL.json", "summary" -> summary, "gates" -> detail)
     if (errCount > 0)
       System.err.println(s"[bench] $errCount entries failed: " +
         errs.map { case (k, v) => s"$k: $v" }.mkString("; "))

@@ -22,7 +22,12 @@ import org.apache.spark.sql.functions._
   * deterministic ±1% noise for the same reason (no tied vectors).
   *
   * Usage: runMain graft.ScaleCorpus <srcDir> <outDir> [k=3]
-  * Then:  SPARK_GRAFT_SF3_DIR=<outDir> … runMain graft.Bench
+  * (the session is `GraftSession.builder()`'s, on `SPARK_GRAFT_CPUS`
+  * cores).
+  * Then:  SPARK_GRAFT_SF3_DIR=<outDir> … runMain graft.Bench — every
+  * lineitem row is replicated exactly k times, so Bench takes the up
+  * rung's factor k as the ratio of the two corpora's lineitem row
+  * counts.
   */
 object ScaleCorpus {
 
@@ -30,12 +35,7 @@ object ScaleCorpus {
     val src = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/tmp/sf0.3"
     val k = if (args.length > 2) args(2).toInt else 3
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     write(spark, src, out, k)
     println(s"SCALE CORPUS written: $out (x$k of $src)")

@@ -6,8 +6,8 @@ import org.apache.spark.sql.graftbridge.ListenerBridge
 
 /** The runner core: [[Bench.runGate]] (one timed, tagged run that
   * always releases gate scratch), the per-gate [[Bench.Tally]] read
-  * after an exact listener-bus drain, and [[Bench.fitLine]], the last
-  * bound on the stdout summary line.
+  * after an exact listener-bus drain, and [[Bench.regressions]], the
+  * guard that compares only records made under one [[Bench.Key]].
   */
 class BenchSpec extends SparkSpec {
 
@@ -48,19 +48,33 @@ class BenchSpec extends SparkSpec {
     } finally sc.removeSparkListener(tally)
   }
 
-  test("fitLine drops headline entries from the end until the summary line fits") {
-    def render(heads: Seq[String]): String =
-      s"""{"metric":"total","value":12.5,"unit":"sec","sf":"$sf","runs":3,""" +
-        s""""queries":${heads.mkString("{", ",", "}")},"detail":"BENCH_FULL.json"}"""
-    val heads = (0 until 300).map(i => f""""q_headline_gate_$i%03d":1.234""")
-    assert(render(heads).length > 1900)
-    val (line, dropped) = Bench.fitLine(render, heads, 1900)
-    assert(line.length <= 1900)
-    assert(dropped > 0 && dropped < heads.size)
-    assert(line == render(heads.take(heads.size - dropped)))
-    assert(render(heads.take(heads.size - dropped + 1)).length > 1900)
-    assert(line.startsWith("""{"metric":"total","value":12.5,"unit":"sec","sf":"""))
-    val small = heads.take(5)
-    assert(Bench.fitLine(render, small, 1900) == (render(small), 0))
+  private val key = Bench.Key("c0ffee", 4, Bench.Action)
+
+  /** A BENCH_FULL.json text with `keyJson` and one median per gate. */
+  private def record(keyJson: String, gates: (String, Double)*): String =
+    s"""{"key": $keyJson, "rev": "0000000", "summary": {"metric":"total"}, "gates": """ +
+      gates.map { case (n, m) => s""""$n": {"median":$m,"runs":[$m],"err":null}""" }
+        .mkString("{\n", ",\n", "\n}") + "}"
+
+  test("the guard flags a 2x slower gate against a record with the same key") {
+    val prev = record(key.json, "q_slow" -> 1.0, "q_same" -> 1.0, "q_gone" -> 1.0)
+    val r = Bench.regressions(prev, key, Map("q_slow" -> 2.0, "q_same" -> 1.05, "q_new" -> 9.0))
+    assert(r == Right(Seq(("q_slow", 1.0, 2.0))), r)
+  }
+
+  test("the guard refuses a record whose key differs, naming the first differing field") {
+    val med = Map("q_slow" -> 2.0)
+    for ((other, field) <- Seq(key.copy(cpus = 32) -> "cpus",
+        key.copy(corpus = "5ca1ab1e") -> "corpus", key.copy(action = "noop") -> "action")) {
+      val r = Bench.regressions(record(other.json, "q_slow" -> 1.0), key, med)
+      assert(r.left.exists(_.startsWith(s"$field differs")), (field, r))
+    }
+  }
+
+  test("the guard refuses a keyless record with no key") {
+    val keyless = """{
+      |"q_slow": {"median":1.0,"runs":[1.0,1.1,0.9],"err":null}
+      |}""".stripMargin
+    assert(Bench.regressions(keyless, key, Map("q_slow" -> 2.0)) == Left("no key"))
   }
 }

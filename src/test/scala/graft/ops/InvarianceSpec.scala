@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{GraftSession, SparkEntry, SparkSpec}
 
 /** Partitioning-invariance battery: the ops layer's standing claim —
   * "integer-exact, partitioning-invariant" — made a CHECKED invariant
@@ -42,16 +42,6 @@ class InvarianceSpec extends SparkSpec {
   private def fingerprint(name: String): String = {
     val df = SparkEntry.queries(name)(spark, invSf)
     Checks.datasetFingerprint(df, df.columns.toSeq).collect()(0).toString
-  }
-
-  private def withConf[T](pairs: (String, String)*)(body: => T): T = {
-    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 
   /** Gates that are partitioning-DEPENDENT by documented contract, or
@@ -120,13 +110,13 @@ class InvarianceSpec extends SparkSpec {
         "and AQE on/off") {
       val base = fingerprint(name)
       val repartitioned =
-        withConf("spark.sql.shuffle.partitions" -> "5")(fingerprint(name))
+        GraftSession.withConf(spark, "spark.sql.shuffle.partitions" -> "5")(fingerprint(name))
       assert(repartitioned == base,
         s"$name changes under shuffle.partitions=5: $base vs $repartitioned" +
           " — a partition-count dependence (accumulation order, " +
           "per-partition RNG, or first-row tie-break) that breaks at scale")
       val noAqe =
-        withConf("spark.sql.adaptive.enabled" -> "false")(fingerprint(name))
+        GraftSession.withConf(spark, "spark.sql.adaptive.enabled" -> "false")(fingerprint(name))
       assert(noAqe == base,
         s"$name changes with AQE off: $base vs $noAqe — the result must " +
           "not depend on runtime re-planning")
@@ -134,7 +124,7 @@ class InvarianceSpec extends SparkSpec {
       // eval() path must agree with its doGenCode() path IN SITU (the
       // per-expression unit tests can't see interactions with casts,
       // null plumbing, and aggregate buffers inside real gate plans)
-      val interpreted = withConf(
+      val interpreted = GraftSession.withConf(spark,
         "spark.sql.codegen.wholeStage" -> "false",
         "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(fingerprint(name))
       assert(interpreted == base,

@@ -296,7 +296,7 @@ class OpsSpec extends SparkSpec {
     // the production shape: centroids + index built once (round-tripped
     // through parquet like a persisted artifact), searched separately
     val centroids = Similarity.ivfCentroids(emb, nCells = 16)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_idx_").toString
+    val dir = graft.TmpCleanup.tempDir("ivf_idx_")
     Similarity.ivfIndex(emb, centroids).write.mode("overwrite").parquet(dir)
     val index = spark.read.parquet(dir)
     val split = Similarity.ivfSearch(index, centroids, queries, k = 5, nProbe = 4)

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{GraftSession, SparkSpec, Tables}
 
 /** Optimizer-injection surface: the flag-gated count(DISTINCT) → HLL++
   * rewrite, and AQE's runtime skew-join splitting (the other half of
@@ -121,9 +121,7 @@ class RewriteSpec extends SparkSpec {
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    GraftSession.withConf(spark, confs.toSeq: _*) {
       // left: 300k rows, half piled on key 0; right omits key 0 so the
       // join output stays small while the skewed partition is real.
       val left = spark.range(300000)
@@ -137,11 +135,6 @@ class RewriteSpec extends SparkSpec {
       val finalPlan = joined.queryExecution.executedPlan.toString
       assert(finalPlan.toLowerCase.contains("skew"),
         s"expected a skew-split join in the final adaptive plan:\n$finalPlan")
-    } finally {
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
     }
   }
 
@@ -152,9 +145,7 @@ class RewriteSpec extends SparkSpec {
       "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "67108864",
       "spark.sql.shuffle.partitions" -> "64")
-    val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    GraftSession.withConf(spark, confs.toSeq: _*) {
       // 64 shuffle partitions of a few KB each: AQE must fuse them
       // instead of scheduling 64 near-empty reducers
       val agg = spark.range(10000)
@@ -166,11 +157,6 @@ class RewriteSpec extends SparkSpec {
         s"expected a coalesced AQE shuffle read:\n$finalPlan")
       val parts = agg.rdd.getNumPartitions
       assert(parts < 64, s"expected far fewer than 64 reducers, got $parts")
-    } finally {
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
     }
   }
 
@@ -254,15 +240,12 @@ class RewriteSpec extends SparkSpec {
         .sortBy(t => (t._1, t._3)).toSeq
       (out.queryExecution.executedPlan.toString, rows)
     }
-    val conf = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.enabled", "spark.sql.cbo.enabled")
-    val saved = conf.map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "2KB")
-      // leg A — no stats, no AQE: file-size estimate of the unfiltered
-      // table keeps the change batch above threshold → no broadcast
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.cbo.enabled", "false")
+    // leg A — no stats, no AQE: file-size estimate of the unfiltered
+    // table keeps the change batch above threshold → no broadcast
+    try GraftSession.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "2KB",
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.cbo.enabled" -> "false") {
       val (planA, rowsA) = run()
       assert(!planA.contains("BroadcastHashJoin"),
         s"leg A must sort-merge everywhere:\n$planA")
@@ -285,9 +268,6 @@ class RewriteSpec extends SparkSpec {
         s"CBO stats must produce a STATIC broadcast plan:\n$planC")
       assert(rowsC == rowsA, "CBO reorder changed results")
     } finally {
-      saved.foreach { case (k, v) =>
-        v match { case Some(x) => spark.conf.set(k, x)
-                  case None => spark.conf.unset(k) } }
       Seq("cbo_scd_dim", "cbo_scd_chg").foreach(t =>
         spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
@@ -328,11 +308,9 @@ class RewriteSpec extends SparkSpec {
     }
     def colStatK = spark.sessionState.catalog
       .getTableMetadata(TableIdentifier("hist_skew")).stats.get.colStats("k")
-    val confKeys = Seq("spark.sql.cbo.enabled",
-      "spark.sql.statistics.histogram.enabled",
-      "spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.enabled")
-    val saved = confKeys.map(k => k -> spark.conf.getOption(k))
-    try {
+    try GraftSession.withConf(spark, "spark.sql.cbo.enabled" -> "false",
+        "spark.sql.statistics.histogram.enabled" -> "false",
+        "spark.sql.adaptive.enabled" -> "false") {
       Seq("hist_skew", "hist_probe").foreach(t =>
         spark.sql(s"ANALYZE TABLE $t COMPUTE STATISTICS"))
       spark.sql("ANALYZE TABLE hist_probe COMPUTE STATISTICS FOR COLUMNS j")
@@ -340,7 +318,6 @@ class RewriteSpec extends SparkSpec {
       assert(colStatK.histogram.isEmpty,
         "histogram must not appear until the flag enables it")
       spark.conf.set("spark.sql.cbo.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
       val estNo = skewFilterStats
       // re-ANALYZE under the histogram flag: this is the code path that
       // runs ApproxCountDistinctForIntervals (percentiles → per-bin ndv)
@@ -370,23 +347,22 @@ class RewriteSpec extends SparkSpec {
       // because the histogram shrank it
       val thresh = math.sqrt(
         estHist.sizeInBytes.toDouble * estNo.sizeInBytes.toDouble).toLong
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh.toString)
-      val planWith = spark.sql(sqlText).queryExecution.sparkPlan.toString
-      assert(planWith.contains("BroadcastHashJoin"),
-        s"histogram estimate under threshold $thresh must broadcast:\n$planWith")
-      // same threshold, histogram dropped (plain re-ANALYZE): back to SMJ
-      spark.conf.set("spark.sql.statistics.histogram.enabled", "false")
-      spark.sql("ANALYZE TABLE hist_skew COMPUTE STATISTICS FOR COLUMNS k, j")
-      assert(colStatK.histogram.isEmpty, "re-ANALYZE must drop the histogram")
-      val planWithout = spark.sql(sqlText).queryExecution.sparkPlan.toString
-      assert(!planWithout.contains("BroadcastHashJoin"),
-        s"without the histogram the same threshold must sort-merge:\n$planWithout")
-      // the flip is an estimate change only — results identical
-      assert(spark.sql(sqlText).head().getLong(0) == 1000L * 50)
+      GraftSession.withConf(spark,
+          "spark.sql.autoBroadcastJoinThreshold" -> thresh.toString) {
+        val planWith = spark.sql(sqlText).queryExecution.sparkPlan.toString
+        assert(planWith.contains("BroadcastHashJoin"),
+          s"histogram estimate under threshold $thresh must broadcast:\n$planWith")
+        // same threshold, histogram dropped (plain re-ANALYZE): back to SMJ
+        spark.conf.set("spark.sql.statistics.histogram.enabled", "false")
+        spark.sql("ANALYZE TABLE hist_skew COMPUTE STATISTICS FOR COLUMNS k, j")
+        assert(colStatK.histogram.isEmpty, "re-ANALYZE must drop the histogram")
+        val planWithout = spark.sql(sqlText).queryExecution.sparkPlan.toString
+        assert(!planWithout.contains("BroadcastHashJoin"),
+          s"without the histogram the same threshold must sort-merge:\n$planWithout")
+        // the flip is an estimate change only — results identical
+        assert(spark.sql(sqlText).head().getLong(0) == 1000L * 50)
+      }
     } finally {
-      saved.foreach { case (k, v) =>
-        v match { case Some(x) => spark.conf.set(k, x)
-                  case None => spark.conf.unset(k) } }
       Seq("hist_skew", "hist_probe").foreach(t =>
         spark.sql(s"DROP TABLE IF EXISTS $t"))
     }

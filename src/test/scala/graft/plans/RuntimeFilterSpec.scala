@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.functions._
 
-import graft.{SparkSpec, Tables}
+import graft.{GraftSession, SparkSpec, Tables}
 
 /** Runtime row- and partition-level filtering — the two optimizer
   * features that matter most for 100 TB star joins: dynamic partition
@@ -12,16 +12,6 @@ import graft.{SparkSpec, Tables}
   * the shuffle).
   */
 class RuntimeFilterSpec extends SparkSpec {
-
-  private def withConfs[T](pairs: (String, String)*)(body: => T): T = {
-    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   test("dynamic partition pruning injects a runtime subquery filter") {
     Tables.registerAll(spark, sf)
@@ -47,7 +37,7 @@ class RuntimeFilterSpec extends SparkSpec {
 
   test("runtime bloom filter pre-filters the fact side of a selective join") {
     Tables.registerAll(spark, sf)
-    withConfs(
+    GraftSession.withConf(spark,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       // gate-scale data sits far below the production thresholds (10 MB
       // creation / 10 GB application) — lower them so the rewrite the

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path => JPath}
+import java.nio.file.{Files, Path => JPath, Paths => JPaths}
 import java.util.EnumSet
 
 import scala.jdk.CollectionConverters._
@@ -14,7 +14,7 @@ import org.apache.hadoop.fs.{CreateFlag, FileContext, FileSystem, Options, Path,
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions.col
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{SparkEntry, SparkSpec, TmpCleanup}
 
 /** The session's `file:` binding (GraftSession.withHive): both Hadoop
   * APIs resolve to the NIO-backed classes, which set and report what
@@ -24,7 +24,7 @@ import graft.{SparkEntry, SparkSpec}
 class LocalFsSpec extends SparkSpec {
   private val root = URI.create("file:///")
   private def hpath(p: JPath) = new Path(p.toUri)
-  private def fresh(): JPath = Files.createTempDirectory("graft_lfs")
+  private def fresh(): JPath = JPaths.get(TmpCleanup.tempDir("graft_lfs"))
   private def raw(fs: RawLocalFileSystem): RawLocalFileSystem = {
     fs.initialize(root, new Configuration)
     fs

@@ -16,7 +16,7 @@ class SourcesSpec extends SparkSpec {
 
   private lazy val nation = Tables.load(spark, sf, "nation")
   private def tmp(): String =
-    Files.createTempDirectory("graft_src").toString
+    graft.TmpCleanup.tempDir("graft_src")
 
   test("csv round-trip preserves values (header + explicit schema)") {
     val dir = tmp()
@@ -252,7 +252,7 @@ class SourcesSpec extends SparkSpec {
 
   test("Trigger.AvailableNow drains a file source then stops on its own") {
     import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_avail_now").toString
+    val tmp = graft.TmpCleanup.tempDir("graft_avail_now")
     spark.range(100).selectExpr("id", "id * id AS sq")
       .repartition(4).write.mode("overwrite").parquet(tmp)
     val name = "avail_now_sink"

@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 import graft.streaming.Streaming._
 import graft.streaming.{Event, SessionOut}
 
@@ -700,7 +700,7 @@ class StreamingSpec extends SparkSpec with org.scalatest.Retries {
     // numPartitions=1 is load-bearing: continuous tasks are long-running
     // and would otherwise occupy all local[4] slots, starving the
     // polling job below forever.
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cont").toString
+    val ckpt = graft.TmpCleanup.tempDir("graft_cont")
     val q = spark.readStream.format("rate")
       .option("rowsPerSecond", 200).option("numPartitions", 1).load()
       .filter($"value" % 2 === 0)
@@ -742,7 +742,7 @@ class StreamingSpec extends SparkSpec with org.scalatest.Retries {
     // foreach (memory refuses recovery by design — not fault-tolerant);
     // each run collects into its own static bucket.
     ContRecCollector.clear(1, 2)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cont_rec").toString
+    val ckpt = graft.TmpCleanup.tempDir("graft_cont_rec")
     def launch(run: Int) = spark.readStream.format("rate")
       .option("rowsPerSecond", 500).option("numPartitions", 1).load()
       .select($"value")
@@ -805,7 +805,7 @@ class StreamingSpec extends SparkSpec with org.scalatest.Retries {
     //    the commit boundary are re-delivered by run 2 (resume ≤ them);
     //  - no loss: run1 ∪ run2 covers [0 .. max(run1)] contiguously.
     ContRecCollector.clear(101, 102)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cont_epoch").toString
+    val ckpt = graft.TmpCleanup.tempDir("graft_cont_epoch")
     def launch(run: Int) = spark.readStream.format("rate")
       .option("rowsPerSecond", 500).option("numPartitions", 1).load()
       .select($"value")
@@ -885,12 +885,10 @@ class StreamingSpec extends SparkSpec with org.scalatest.Retries {
     // Collector tags: 211+run = batchIds DELIVERED to the wrapper,
     // 221+run = batchIds whose body actually APPLIED.
     ContRecCollector.clear(211, 212, 213, 214, 221, 222, 223, 224)
-    val in = java.nio.file.Files.createTempDirectory("graft_feb_in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_feb_out").toString
-    val markers = java.nio.file.Files
-      .createTempDirectory("graft_feb_mark").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_feb_ckpt").toString
+    val in = graft.TmpCleanup.tempDir("graft_feb_in")
+    val out = graft.TmpCleanup.tempDir("graft_feb_out")
+    val markers = graft.TmpCleanup.tempDir("graft_feb_mark")
+    val ckpt = graft.TmpCleanup.tempDir("graft_feb_ckpt")
     def addFile(name: String, lines: Seq[Long]): Unit =
       java.nio.file.Files.write(java.nio.file.Paths.get(in, name),
         lines.mkString("\n").getBytes("UTF-8"))
@@ -971,7 +969,7 @@ class StreamingSpec extends SparkSpec with org.scalatest.Retries {
     //  - nothing below it (epochs with a PRESENT commit) re-delivered;
     //  - no loss across the injected tear.
     ContRecCollector.clear(103, 104)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cont_torn").toString
+    val ckpt = graft.TmpCleanup.tempDir("graft_cont_torn")
     def launch(run: Int) = spark.readStream.format("rate")
       .option("rowsPerSecond", 500).option("numPartitions", 1).load()
       .select($"value")
@@ -1057,10 +1055,8 @@ class StreamingSpec extends SparkSpec with org.scalatest.Retries {
       "per-type counters across batches") {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, providerKey ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val in = MemoryStream[(String, String, Long)]
       val out = in.toDS().groupByKey(_._1)
         .transformWithState(new LogAndCountsProcessor(logCap = 3),
@@ -1083,9 +1079,6 @@ class StreamingSpec extends SparkSpec with org.scalatest.Retries {
         assert(rows == Seq((2L, 2L, 2L), (3L, 2L, 3L), (0L, 3L, 5L)),
           s"log sizes, distinct types, totals: $rows")
       } finally q.stop()
-    } finally saved match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
     }
   }
 
@@ -1093,10 +1086,8 @@ class StreamingSpec extends SparkSpec with org.scalatest.Retries {
       "continue from the handed-over values") {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, providerKey ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val init = Seq(("a", 100L), ("b", 7L)).toDS().groupByKey(_._1)
       val in = MemoryStream[(String, Long)]
       val out = in.toDS().groupByKey(_._1)
@@ -1117,9 +1108,6 @@ class StreamingSpec extends SparkSpec with org.scalatest.Retries {
         assert(rows == Map("a" -> 101L, "b" -> 9L, "c" -> 3L),
           s"bootstrapped totals: $rows")
       } finally q.stop()
-    } finally saved match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
     }
   }
 
@@ -1127,10 +1115,8 @@ class StreamingSpec extends SparkSpec with org.scalatest.Retries {
       "fires after the quiet period with the accumulated count") {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, providerKey ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val bucket = 203
       ContRecCollector.clear(bucket)
       val in = MemoryStream[(String, Long)]
@@ -1165,9 +1151,6 @@ class StreamingSpec extends SparkSpec with org.scalatest.Retries {
         awaitValue(1L)
         awaitValue(-1L)
       } finally q.stop()
-    } finally saved match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
     }
   }
 
@@ -1175,10 +1158,8 @@ class StreamingSpec extends SparkSpec with org.scalatest.Retries {
       "absent, fresh state survives") {
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, providerKey ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       // ONE long-running query per case; deliveries observed through a
       // foreach collector.  TimeMode.ProcessingTime keeps the trigger
       // loop running empty batches to advance time (so neither
@@ -1230,9 +1211,6 @@ class StreamingSpec extends SparkSpec with org.scalatest.Retries {
       val kept = run(ttlMs = 600000, sleepMs = 0, bucket = 202)
       assert(kept == Seq((1L, false), (2L, true)),
         s"fresh state must survive: $kept")
-    } finally saved match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
     }
   }
 

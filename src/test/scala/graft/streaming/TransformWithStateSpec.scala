@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 
 // the RunningTotalProcessor under test lives in graft.streaming (main),
 // where the q_stream_tws gate entry also drives it
@@ -13,10 +13,8 @@ class TransformWithStateSpec extends SparkSpec {
 
   test("transformWithState keeps typed per-key state across micro-batches") {
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(spark, providerKey ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       implicit val sqlCtx = spark.sqlContext
       val input = MemoryStream[(String, Long)]
       val out = input.toDS()
@@ -36,11 +34,6 @@ class TransformWithStateSpec extends SparkSpec {
         .as[(String, Long, Long)].collect().toSet
       // batch 1 emits fresh totals; batch 2's "a" accumulates state
       assert(rows == Set(("a", 1L, 1L), ("b", 2L, 2L), ("a", 10L, 11L)))
-    } finally {
-      saved match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
     }
   }
 }
