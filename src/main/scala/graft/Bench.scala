@@ -8,6 +8,7 @@ import scala.sys.process.{Process, ProcessLogger}
 import scala.util.Try
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftbridge.ListenerBridge
@@ -43,7 +44,8 @@ import org.apache.spark.sql.graftbridge.ListenerBridge
   * instead it prints, before the summary line, each gate's execution
   * profile from the timed passes: median wall, and per pass the jobs,
   * executed stages, tasks, executor and GC time and shuffle volume,
-  * then its 8 stages with the most executor time ([[Tally]]).
+  * and the classes Spark compiled, then its 8 stages with the most
+  * executor time ([[Tally]]).
   *
   * Entries are reported in two CLASSES: data-scaling gates and
   * protocol-constant streaming-replay gates ([[isProtocol]]), with
@@ -60,25 +62,30 @@ object Bench {
     */
   private[graft] val GateKey = "graft.gate"
 
-  /** One finished run of a gate: wall seconds and result row count. */
-  final case class Timed(secs: Double, rows: Long)
+  /** One finished run of a gate: wall seconds, result row count, and
+    * the generated classes Spark compiled during it (cache misses of
+    * `CodeGenerator`, JVM-wide).
+    */
+  final case class Timed(secs: Double, rows: Long, compiles: Long)
 
   /** The action [[runGate]] times, as recorded in every [[Key]]. */
   private[graft] val Action = "count"
 
   /** One timed run of gate `name` over corpus `dir`: tag the thread's
     * jobs with the gate, time `fn(spark, dir).count()` (the gate's build
-    * included), untag, then release the gate's scratch outside the timed
-    * region.  Left is the error's first line.
+    * included) and count the classes compiled meanwhile, untag, then
+    * release the gate's scratch outside the timed region.  Left is the
+    * error's first line.
     */
   def runGate(spark: SparkSession, name: String, dir: String): Either[String, Timed] = {
     val sc = spark.sparkContext
     sc.setLocalProperty(GateKey, name)
+    val c0 = compileCount
     val t0 = System.nanoTime()
     val r =
       try {
         val rows = SparkEntry.queries(name)(spark, dir).count()
-        Right(Timed((System.nanoTime() - t0) / 1e9, rows))
+        Right(Timed((System.nanoTime() - t0) / 1e9, rows, compileCount - c0))
       } catch { case e: Throwable => Left(firstLine(e)) }
       finally sc.setLocalProperty(GateKey, null)
     // replay corpora, checkpoints, round-trip files: a 602-entry
@@ -86,6 +93,11 @@ object Bench {
     TmpCleanup.releaseGateScratch()
     r
   }
+
+  /** Generated classes compiled so far in this JVM: Spark records each
+    * `CodeGenerator` cache miss in this histogram, a hit in none.
+    */
+  private[graft] def compileCount: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Warm the file indexes, parquet footers and first codegen of every
     * table under `dir` with one trivial action each.
@@ -168,17 +180,19 @@ object Bench {
   }
 
   /** A gate's profile over `passes` timed runs: the median wall, then per
-    * pass its jobs, stages, tasks, executor and GC time and shuffle
-    * volume, then the 8 stages (of all passes) with the most executor
-    * time.
+    * pass its jobs, stages, tasks, executor and GC time, shuffle volume
+    * and compiled classes (`compiles`, summed over the runs), then the 8
+    * stages (of all passes) with the most executor time.
     */
-  private def profile(name: String, walls: Seq[Double], passes: Int, g: GateStat): Seq[String] = {
+  private def profile(name: String, walls: Seq[Double], passes: Int, g: GateStat,
+      compiles: Long): Seq[String] = {
     val med = walls.sorted.lift(walls.size / 2).getOrElse(-1.0)
     val top = g.stages.toSeq.sortBy(-_._2.execMs).take(8)
     (f"== $name%-28s wall=${med}%7.3fs (all=${walls.map(w => f"$w%.2f").mkString(",")})" +
       f" jobs=${g.jobs / passes}%3d stages=${g.stages.size / passes}%4d tasks=${g.total(_.tasks) / passes}%5d" +
       f" execTime=${g.total(_.execMs) / 1e3 / passes}%7.2fs gc=${g.total(_.gcMs) / 1e3 / passes}%6.2fs" +
-      f" shufR=${g.total(_.shufReadB) / 1e6 / passes}%8.2fMB shufW=${g.total(_.shufWriteB) / 1e6 / passes}%8.2fMB") +:
+      f" shufR=${g.total(_.shufReadB) / 1e6 / passes}%8.2fMB shufW=${g.total(_.shufWriteB) / 1e6 / passes}%8.2fMB" +
+      f" compiles=${compiles.toDouble / passes}%6.1f") +:
       top.map { case (id, a) =>
         f"     stage $id%5d exec=${a.execMs / 1e3}%7.2fs wall=${a.wallMs / 1e3}%7.2fs tasks=${a.tasks}%4d " +
           f"shufR=${a.shufReadB / 1e6}%7.2fMB shufW=${a.shufWriteB / 1e6}%7.2fMB  ${a.name}"
@@ -287,18 +301,27 @@ object Bench {
     val tally = new Tally
     if (only.nonEmpty) spark.sparkContext.addSparkListener(tally)
     val samples = mutable.Map.empty[String, mutable.ArrayBuffer[Double]]
+    val compiles = mutable.Map.empty[String, Long].withDefaultValue(0L)
     val errs = mutable.Map.empty[String, String]
     def timed(name: String): Unit = runGate(spark, name, sfDir) match {
       case Right(t) =>
         samples.getOrElseUpdate(name, mutable.ArrayBuffer.empty) += t.secs
+        compiles(name) += t.compiles
       case Left(e) => errs(name) = e
     }
     val dataNames = names.filterNot(isProtocol)
     val protoNames = names.filter(isProtocol)
     // One UNRECORDED warmup execution per data gate before timing:
-    // run 1 of a cold battery is pure JIT/codegen warmup (round-12
-    // q_random_walks: run 1 = 40.5 s vs 4.2-5.2 s after) and poisons
-    // 3-run medians on gates whose kernels only it exercises.
+    // run 1 of a cold battery pays JIT warmup and the first read of
+    // every parquet footer (round-12 q_random_walks: run 1 = 40.5 s vs
+    // 4.2-5.2 s after), which would poison 3-run medians on gates whose
+    // kernels only it exercises.  It does not keep codegen warm: the
+    // run-major battery below compiles about 6.5k classes per round, so
+    // it cycles any bounded class cache and most gates' timed runs
+    // still include their compiles.  A BENCH_ONLY subset stays inside
+    // the cache: its timed runs compile only stages that hold a limit,
+    // whose counter name Spark draws from a JVM-global id (q_knn_brute:
+    // 2 per run).
     dataNames.foreach(n => runGate(spark, n, sfDir).left.foreach(warmupFailed(n, _)))
     ListenerBridge.drain(spark.sparkContext)
     tally.clear()
@@ -315,7 +338,8 @@ object Bench {
       ListenerBridge.drain(spark.sparkContext)
       names.foreach { n =>
         val passes = math.max(1, if (isProtocol(n)) protoRuns else runs)
-        profile(n, samples.getOrElse(n, Nil).toSeq, passes, tally(n)).foreach(println)
+        profile(n, samples.getOrElse(n, Nil).toSeq, passes, tally(n), compiles(n))
+          .foreach(println)
       }
     }
     def median(xs: Seq[Double]): Double = {
@@ -500,12 +524,13 @@ object Bench {
     // shards) probes super-linearity with more range exactly where the
     // iterative graph/suffix ops' constants start to matter.  Opt-in
     // via SPARK_GRAFT_SF3_DIR; the 15 slowest data gates are re-timed
-    // with 3-run medians at sf0.1 and the up rung, the exponent
-    // normalized by the data step (log base = factor, the ratio of the
-    // two corpora's lineitem row counts: ScaleCorpus replicates every
-    // lineitem row exactly k times).  Per-gate
-    // table → BENCH_SCALING_UP.json; same flag bar as the main ladder
-    // (exponent > 1.05 with material top-rung time).
+    // with 3-run medians at the base rung (`SPARK_GRAFT_SF_DIR`,
+    // `t_base`) and the up rung (`t_up`), the exponent normalized by the
+    // data step (log base = factor, the ratio of the two corpora's
+    // lineitem row counts: ScaleCorpus replicates every lineitem row
+    // exactly k times).  Per-gate table → BENCH_SCALING_UP.json, which
+    // names both dirs; same flag bar as the main ladder (exponent > 1.05
+    // with material top-rung time).
     val upRungBlock: String = sys.env.get("SPARK_GRAFT_SF3_DIR")
       .filter(d => Files.isDirectory(Paths.get(d)))
       .map { d3 =>
@@ -525,16 +550,17 @@ object Bench {
           }
         }
         val body = rows.sortBy(-_._4).map { case (n, m1, m3, e) =>
-          s"${jq(n)}: {\"t_sf0_1\":${r3(m1)},\"t_up\":${r3(m3)}," +
+          s"${jq(n)}: {\"t_base\":${r3(m1)},\"t_up\":${r3(m3)}," +
             s"\"up_raw_exponent\":${r3(e)}}"
         }.mkString("{\n", ",\n", "\n}")
-        writeRecord("BENCH_SCALING_UP.json", "factor" -> factor.toString, "gates" -> body)
+        writeRecord("BENCH_SCALING_UP.json", "base" -> jq(sfDir), "up" -> jq(d3),
+          "factor" -> factor.toString, "gates" -> body)
         val maxE = r3(rows.map(_._4).maxOption.getOrElse(0.0))
         val fl = rows.filter(r => r._4 > 1.05 && r._3 > 0.5)
           .map { case (n, m1, m3, e) =>
             s"[${jq(n)},${r3(e)},${r3(m1)},${r3(m3)}]" }
           .mkString("[", ",", "]")
-        s"""{"enabled":true,"dir":${jq(d3)},"factor":$factor,""" +
+        s"""{"enabled":true,"base":${jq(sfDir)},"dir":${jq(d3)},"factor":$factor,""" +
           s""""entries":${rows.size},"max_up_exponent":$maxE,""" +
           s""""flagged":$fl,"detail":"BENCH_SCALING_UP.json"}"""
       }.getOrElse("""{"enabled":false}""")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.sources.{NioLocalFileSystem, NioLocalFs}
+import graft.sources.{MemCatalog, NioLocalFileSystem, NioLocalFs}
 
 /** Session plumbing shared by the runtime mains (Bench, Verify,
   * PlanAudit, PlanDump) and the test harness: one runtime session
@@ -36,6 +36,20 @@ import graft.sources.{NioLocalFileSystem, NioLocalFs}
   * when it is in the conf before the first `file:` lookup — that is,
   * set on the session builder, as here, never later through
   * `spark.conf` or `hadoopConfiguration`.
+  *
+  * The session sizes Spark's cache of compiled generated classes
+  * (`spark.sql.codegen.cache.maxEntries`) to 1000 entries.  Spark's
+  * default of 100 is below the working set of one pass over a few
+  * heavy gates (about 185 classes for the ten gates of perfbench's
+  * `curate_ingest`), so the LRU evicted what the next pass needed and
+  * almost every class was compiled again on every pass.  A cached
+  * class costs about 55 KB of heap plus 45 KB of metaspace, so a full
+  * cache holds about 100 MB.  The cache is created once per JVM, when
+  * `CodeGenerator` is first used, from the conf of the session that is
+  * active at that moment; the key is a static SQL conf, so it only
+  * takes on the builder, and only when this session is the first to
+  * generate code in the JVM.  A caller can still override the value
+  * on its own builder.
   */
 object GraftSession {
 
@@ -113,6 +127,13 @@ object GraftSession {
       // the library's whole extension surface (optimizer rule, planner
       // strategy, SQL function names) rides one config line
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      // one pass's generated classes stay compiled for the next (see
+      // the object doc)
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      // the DSv2 plugin catalog of the q_catalog_*, q_merge_into and
+      // graft_cat fuzz gates: a gate that set it would leave it set,
+      // since a gate returns a lazy frame that withConf cannot scope
+      .config("spark.sql.catalog.graft_cat", classOf[MemCatalog].getName)
       .enableHiveSupport()
   }
 }

@@ -15,9 +15,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object CatalogQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  private def withCatalog(s: SparkSession): Unit =
-    s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.MemCatalog")
-
   val queries: Map[String, Q] = Map(
     // Full DDL/DML lifecycle against the plugin catalog: CREATE
     // NAMESPACE/TABLE → INSERT (v2 append) → ALTER ADD COLUMN (old
@@ -25,7 +22,6 @@ object CatalogQueries {
     // back.  Re-runnable: the table is dropped up front.
     "q_catalog_table" -> { (s, dir) =>
       graft.Tables.registerAll(s, dir)
-      withCatalog(s)
       s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.ns")
       s.sql("DROP TABLE IF EXISTS graft_cat.ns.nation_stats")
       s.sql("CREATE TABLE graft_cat.ns.nation_stats (rkey BIGINT, n_nations BIGINT)")
@@ -45,7 +41,6 @@ object CatalogQueries {
     // is corpus-independent.
     "q_update_delete" -> { (s, dir) =>
       graft.Tables.registerAll(s, dir)
-      withCatalog(s)
       s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.ns")
       s.sql("DROP TABLE IF EXISTS graft_cat.ns.cust_counts")
       s.sql("""CREATE TABLE graft_cat.ns.cust_counts
@@ -67,7 +62,6 @@ object CatalogQueries {
     // twin states the same post-state as a FULL JOIN.
     "q_merge_into" -> { (s, dir) =>
       graft.Tables.registerAll(s, dir)
-      withCatalog(s)
       s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.ns")
       s.sql("DROP TABLE IF EXISTS graft_cat.ns.region_counts")
       s.sql("CREATE TABLE graft_cat.ns.region_counts (rkey BIGINT, n BIGINT)")
@@ -92,7 +86,6 @@ object CatalogQueries {
     // arms Spark 4 adds over classic upsert MERGE.
     "q_merge_delete" -> { (s, dir) =>
       graft.Tables.registerAll(s, dir)
-      withCatalog(s)
       s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.ns")
       s.sql("DROP TABLE IF EXISTS graft_cat.ns.nation_sizes")
       s.sql("CREATE TABLE graft_cat.ns.nation_sizes (nkey BIGINT, n BIGINT)")
@@ -116,7 +109,6 @@ object CatalogQueries {
     // version counter, so the gate is re-runnable.
     "q_time_travel" -> { (s, dir) =>
       graft.Tables.registerAll(s, dir)
-      withCatalog(s)
       s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.ns")
       s.sql("DROP TABLE IF EXISTS graft_cat.ns.prio_counts")
       s.sql("CREATE TABLE graft_cat.ns.prio_counts (pr STRING, n BIGINT)")
@@ -152,7 +144,6 @@ object CatalogQueries {
     // oracle must be re-derived from a pre-expiry snapshots() CALL.
     "q_call_procedure" -> { (s, dir) =>
       graft.Tables.registerAll(s, dir)
-      withCatalog(s)
       s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.ns")
       s.sql("DROP TABLE IF EXISTS graft_cat.ns.brand_counts")
       s.sql("CREATE TABLE graft_cat.ns.brand_counts (b STRING, n BIGINT)")
@@ -183,7 +174,6 @@ object CatalogQueries {
     // its built-ins.
     "q_catalog_function" -> { (s, dir) =>
       graft.Tables.registerAll(s, dir)
-      withCatalog(s)
       s.sql("CREATE NAMESPACE IF NOT EXISTS graft_cat.ns")
       s.sql("""SELECT l_linenumber AS ln, count(*) AS n,
               |  CAST(sum(graft_cat.ns.gcd(l_orderkey, l_partkey)) AS BIGINT) AS sum_gcd,

@@ -1128,7 +1128,6 @@ object FuzzQueries {
   } ++ mutationScripts.map { case (name, script) =>
     name -> (((s: SparkSession, dir: String) => {
       Tables.registerAll(s, dir)
-      s.conf.set("spark.sql.catalog.graft_cat", "graft.sources.MemCatalog")
       script.ddl.foreach(s.sql(_)) // commands execute eagerly
       s.sql(script.finalSelect)
     }): Q)

@@ -3,7 +3,8 @@ package graft
 /** [[GraftSession.withConf]] puts every key back as `spark.conf.getAll`
   * had it: an explicit value is restored, anything else is unset —
   * including a registered key, whose `getOption` default must not come
-  * back as an explicit setting.
+  * back as an explicit setting.  The session shape itself carries the
+  * `graft_cat` plugin catalog, so no gate sets it.
   */
 class GraftSessionSpec extends SparkSpec {
 
@@ -26,6 +27,16 @@ class GraftSessionSpec extends SparkSpec {
     }
     assert(err.getMessage == "body failed")
     assert(spark.conf.getAll == before)
+  }
+
+  test("the session registers graft_cat, so the catalog gates leave its conf as it was") {
+    assert(spark.conf.get("spark.sql.catalog.graft_cat") == "graft.sources.MemCatalog")
+    Tables.registerAll(spark, sf) // sets its own parquet conf once
+    val before = spark.conf.getAll
+    for (g <- Seq("q_catalog_table", "q_merge_into"))
+      assert(Bench.runGate(spark, g, sf).isRight, g)
+    val after = spark.conf.getAll
+    assert((before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k)).isEmpty)
   }
 
   test("withConf returns the body's value") {
