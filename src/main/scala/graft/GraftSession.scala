@@ -99,7 +99,9 @@ object GraftSession {
   }
 
   /** Add Hive support backed by a per-process temp metastore +
-    * warehouse to a session builder.
+    * warehouse to a session builder.  It also sets
+    * `spark.sql.legacy.parquet.nanosAsLong`, which [[Tables.events]]
+    * reads the nanosecond `ts` column under, so no load sets a conf.
     */
   def withHive(b: SparkSession.Builder): SparkSession.Builder = {
     // Metastore and warehouse live in SESSION-scoped scratch (JVM temp
@@ -124,8 +126,8 @@ object GraftSession {
       // Hadoop APIs (see the object doc)
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
-      // the library's whole extension surface (optimizer rule, planner
-      // strategy, SQL function names) rides one config line
+      // the library's whole extension surface (planner strategy, SQL
+      // function names) rides one config line
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       // one pass's generated classes stay compiled for the next (see
       // the object doc)
@@ -134,6 +136,8 @@ object GraftSession {
       // graft_cat fuzz gates: a gate that set it would leave it set,
       // since a gate returns a lazy frame that withConf cannot scope
       .config("spark.sql.catalog.graft_cat", classOf[MemCatalog].getName)
+      // Tables.events reads ns timestamps as longs (see the method doc)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .enableHiveSupport()
   }
 }

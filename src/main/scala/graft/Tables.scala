@@ -54,13 +54,12 @@ object Tables {
     * file actually has instead of assuming one, so a data regeneration
     * can't poison every events-touching query at analysis time.
     * DuckDB's `CAST(ts AS TIMESTAMP)` is identical under both forms.
-    * `nanosAsLong` is set before the footer is read, so the footer's
-    * schema already shows the long form.
+    * `nanosAsLong` comes from the session shape
+    * ([[GraftSession.withHive]]), so the footer's schema already shows
+    * the long form and loading sets no conf.
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(spark: SparkSession, dir: String): DataFrame =
     eventsTs(parquet(spark, s"$dir/events.parquet"))
-  }
 
   /** The `ts` switch of [[events]] over the raw events frame. */
   private[graft] def eventsTs(raw: DataFrame): DataFrame = {

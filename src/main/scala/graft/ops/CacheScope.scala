@@ -14,32 +14,17 @@ import org.apache.spark.sql.DataFrame
   * running hundreds of queries then never accumulates operator-private
   * blocks (the checkpointed result itself is reclaimed by the
   * ContextCleaner once the returned DataFrame is unreachable).
+  *
+  * Both entry points always checkpoint and capture the pre-checkpoint
+  * lineage, so `graft.PlanDump` shows the plan that actually runs,
+  * checkpoint scans included.
   */
 private[graft] object CacheScope {
-  /** Dev-only switch for plan evidence: `SPARK_GRAFT_NOCHECKPOINT=1`
-    * makes [[releasing]]/[[traced]] return the UNCHECKPOINTED frame, so
-    * `graft.PlanDump` can commit the full interior plan of iterative /
-    * multi-branch operators (suffix-doubling rounds, walk frontiers)
-    * instead of a checkpoint-truncated `Scan ExistingRDD` stub — the
-    * round-16 verdict rejected exactly those truncated dumps as
-    * evidence.  Never set by Bench/Verify (or the driver): execution
-    * semantics are unchanged whenever the variable is absent.
-    */
-  private lazy val noCheckpoint = {
-    val on = sys.env.get("SPARK_GRAFT_NOCHECKPOINT").contains("1")
-    // a dev mode is announced, not silent: it changes what every
-    // checkpointing operator materializes, frees and records
-    if (on) System.err.println("[cachescope] SPARK_GRAFT_NOCHECKPOINT=1: " +
-      "operator checkpoints, cache release and lineage capture are all skipped")
-    on
-  }
-
   /** Materialize `result`, then unpersist every cache it was built from.
     * The pre-checkpoint lineage is captured into
     * [[graft.lineage.LineageRegistry]] first, so column lineage traces
     * THROUGH the checkpoint instead of stopping at the RDD scan. */
   def releasing(result: DataFrame, caches: DataFrame*): DataFrame = {
-    if (noCheckpoint) return result
     val out = result.localCheckpoint(true)
     graft.lineage.LineageRegistry.capture(
       result.queryExecution.analyzed, out.queryExecution.analyzed)
@@ -54,7 +39,6 @@ private[graft] object CacheScope {
     * `eager = false` keeps the per-round lazy-materialization contract
     * (capture only reads the analyzed plans, never runs a job). */
   def traced(result: DataFrame, eager: Boolean = true): DataFrame = {
-    if (noCheckpoint) return result
     val out = result.localCheckpoint(eager)
     graft.lineage.LineageRegistry.capture(
       result.queryExecution.analyzed, out.queryExecution.analyzed)

@@ -200,20 +200,11 @@ object Dedup {
     * expression instead of array_intersect/array_union.
     */
   def shingleSets(df: DataFrame, idCol: String, textCol: String,
-      w: Int = 3, fanOutInput: Boolean = true): DataFrame = {
-    // fanOut before the tokenize/shingle kernels: a monolithic input
-    // file otherwise pins them — and the fused MinHash pass most
-    // callers stack on top — to one scan task (guide §2.5 input skew;
-    // no-op when the scan already parallelizes).  Callers whose input
-    // is a capped probe slice (size the plan-stats estimate cannot
-    // see through the filter) pass fanOutInput = false: there the
-    // exchange is pure overhead (measured r16, q_dedup_minhash).
-    val in = df.select(col(idCol).as("id"), col(textCol).as("__sst"))
-    (if (fanOutInput) Layout.fanOut(in) else in)
+      w: Int = 3): DataFrame =
+    df.select(col(idCol).as("id"), col(textCol).as("__sst"))
       .select(col("id"),
         split(TextAnalysis.normalize(col("__sst")), " ").as("toks"))
       .select(col("id"), sort_array(shinglesFromTokens(col("toks"), w)).as("sh"))
-  }
 
   /** Word w-shingles of the normalized text, hashed to 64 bits.
     * Convenience form; prefer [[shingleSets]] in pipelines (see
@@ -275,13 +266,12 @@ object Dedup {
     */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.6, w: Int = 3, k: Int = 64,
-      bands: Int = 16, rows: Int = 4,
-      fanOutInput: Boolean = true): DataFrame = {
+      bands: Int = 16, rows: Int = 4): DataFrame = {
     // The shingle sets feed three plan branches (signatures + both
     // refine joins); cache them so tokenization runs once.  At cluster
     // scale MEMORY_AND_DISK spills gracefully; recomputation would cost
     // three full tokenization passes instead.
-    val sh = shingleSets(df, idCol, textCol, w, fanOutInput)
+    val sh = shingleSets(df, idCol, textCol, w)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Band buckets come from the fused MinHashBuckets expression — the
     // k seeded mins and per-band hashes in one codegen pass per doc
@@ -333,11 +323,7 @@ object Dedup {
       histIdx: DataFrame, histSets: DataFrame, threshold: Double,
       w: Int = 3, k: Int = 64, bands: Int = 16, rows: Int = 4)
       : (DataFrame, DataFrame, DataFrame) = {
-    // fanOutInput = false: ingest micro-batches are small by
-    // construction and their plan stats are often UNKNOWN (streaming
-    // frames), so the skew-guard exchange would be pure per-batch
-    // overhead (r16 ADVICE)
-    val bsh = shingleSets(batch, idCol, textCol, w, fanOutInput = false)
+    val bsh = shingleSets(batch, idCol, textCol, w)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bidx = bsh.select(col("id"),
       posexplode(graft.functions.minhash_buckets(col("sh"), k, bands, rows))
@@ -369,9 +355,8 @@ object Dedup {
     * for validation or small partitions).
     */
   def jaccardPairsExact(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, w: Int = 3,
-      fanOutInput: Boolean = true): DataFrame = {
-    val sh = shingleSets(df, idCol, textCol, w, fanOutInput)
+      threshold: Double, w: Int = 3): DataFrame = {
+    val sh = shingleSets(df, idCol, textCol, w)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val a = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
     val b = sh.select(col("id").as("id_b"), col("sh").as("sh_b"))
@@ -403,10 +388,9 @@ object Dedup {
     * probabilistic) results.
     */
   def prefixFilteredJaccardPairs(df: DataFrame, idCol: String,
-      textCol: String, threshold: Double, w: Int = 3,
-      fanOutInput: Boolean = true): DataFrame = {
+      textCol: String, threshold: Double, w: Int = 3): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0)
-    val sh = shingleSets(df, idCol, textCol, w, fanOutInput)
+    val sh = shingleSets(df, idCol, textCol, w)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val toks = sh.select(col("id"), explode(col("sh")).as("__s"))
     val dfreq = toks.groupBy(col("__s")).agg(count(lit(1)).as("__df"))
@@ -448,11 +432,10 @@ object Dedup {
     * max(c_ab, c_ba) >= threshold.
     */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, w: Int = 3,
-      fanOutInput: Boolean = true): DataFrame = {
+      threshold: Double, w: Int = 3): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0,1], got $threshold")
-    val sh = shingleSets(df, idCol, textCol, w, fanOutInput)
+    val sh = shingleSets(df, idCol, textCol, w)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val inv = sh.select(col("id"), explode(col("sh")).as("__s"))
     val cand = inv.select(col("id").as("id_a"), col("__s"))

@@ -51,6 +51,10 @@ object Layout {
     * invariance contract (InvarianceSpec) already demands of every
     * operator.  Round-robin with Spark's sort-before-repartition
     * (default on) is deterministic under retries.
+    *
+    * Operators never call it on their own input; the caller wraps the
+    * narrow projection it passes in, because only the caller knows
+    * whether that input is already capped small.
     */
   def fanOut(df: DataFrame): DataFrame = {
     val target = fanOutTarget(df)

@@ -1,54 +1,17 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, HyperLogLogPlusPlus}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
-import org.apache.spark.sql.catalyst.rules.Rule
-
-/** Opt-in optimizer rewrite: `count(DISTINCT x)` → HLL++
-  * `approx_count_distinct(x)` when `spark.graft.approxDistinct.enabled`
-  * is true — the classic interactive-dashboard trade (exact cardinality
-  * is a full shuffle of every distinct value; the sketch is a fixed
-  * few-KB buffer merged map-side).
-  *
-  * This is the (c)-level extension surface the rebuild favors over
-  * forking: a `Rule[LogicalPlan]` the reference could only add by
-  * patching its Optimizer (reference
-  * `catalyst/optimizer/Optimizer.scala:47` hard-codes the batch list;
-  * its `RewriteDistinctAggregates.scala:102` rewrite is the in-tree
-  * analogue of this shape).  Spark exposes the same hook unforked via
-  * `SparkSessionExtensions.injectOptimizerRule` ([[GraftExtensions]]) or
-  * `spark.experimental.extraOptimizations`.
-  *
-  * Every unfiltered single-child `count(DISTINCT x)` aggregate
-  * expression rewrites — grouped aggregates and multi-distinct lists
-  * included (each distinct count becomes its own sketch).  Filtered
-  * (`count(DISTINCT x) FILTER (...)`) and multi-child
-  * (`count(DISTINCT a, b)`) forms keep exact semantics.  The rule is a
-  * no-op unless the session flag is set, so correctness-gated queries
-  * are untouched.
-  */
-object ApproxDistinctRewrite extends Rule[LogicalPlan] {
-  val Flag = "spark.graft.approxDistinct.enabled"
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConfString(Flag, "false").toBoolean) plan
-    else plan.transform {
-      case a: Aggregate => a.transformExpressions {
-        case ae @ AggregateExpression(Count(Seq(child)), _, true, None, _) =>
-          ae.copy(aggregateFunction = HyperLogLogPlusPlus(child), isDistinct = false)
-      }
-    }
-}
 
 /** Session extension bundle for graft's additions —
   * `spark.sql.extensions=graft.plans.GraftExtensions` wires the
-  * approx-distinct rewrite (flag-gated, off by default), the TopKPerKey
-  * planner strategy, AND the library's SQL function surface without
-  * touching any Spark source: one config line and `SELECT
+  * TopKPerKey planner strategy AND the library's SQL function surface
+  * without touching any Spark source: one config line and `SELECT
   * graft_hamming64(...)` parses in any SQL client (the unforked
   * equivalent of the reference registering into
-  * `FunctionRegistry.scala`'s built-in list).
+  * `FunctionRegistry.scala`'s built-in list).  It injects no optimizer
+  * rule: an HLL++ distinct count is stock `approx_count_distinct`, and
+  * a one-pass blocklist screen is `graft_multi_match_count` called
+  * directly.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -65,8 +28,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       })
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => ApproxDistinctRewrite)
-    ext.injectOptimizerRule(_ => MultiContainsRewrite)
     ext.injectPlannerStrategy(_ => TopKStrategy)
     ext.injectFunction(fn("graft_hamming64",
       "popcount(a ^ b) of two int64 signatures", 2,

@@ -45,8 +45,9 @@ object LineageQueries {
         .select(col("doc_id").as("qid"),
           substring(col("text"), 1, 40).as("qtext"))
       val bm = graft.ops.Retrieval.bm25TopK(docs, "doc_id", "text", qs, k = 3)
-      val mh = graft.ops.Dedup.minhashPairs(docs, "doc_id", "text",
-        threshold = 0.5)
+      val mh = graft.ops.Dedup.minhashPairs(
+        graft.ops.Layout.fanOut(docs.select(col("doc_id"), col("text"))),
+        "doc_id", "text", threshold = 0.5)
       val edges = ColumnLineage.of(bm).toDF(s)
           .withColumn("op", lit("bm25"))
         .unionByName(ColumnLineage.of(mh).toDF(s)

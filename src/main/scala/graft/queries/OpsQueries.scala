@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ops.{Checks, Dedup, Drift, DupClusters, Multimodal, Pq, Profile, Quantize, SemDedup, Similarity, TableDiff, TextAnalysis}
+import graft.ops.{Checks, Dedup, Drift, DupClusters, Layout, Multimodal, Pq, Profile, Quantize, SemDedup, Similarity, TableDiff, TextAnalysis}
 
 /** Query entries for the LLM-pipeline operators (dedup, similarity,
   * text analysis, multimodal) — the north-star additions beyond the
@@ -118,13 +118,8 @@ object OpsQueries {
     // pair-level goldens live in DedupSpec.)
     "q_dedup_minhash" -> { (s, dir) =>
       val docs = jaccardProbeDocs(s, dir)
-      // fanOutInput = false: the probe slice is capped at ~200 docs by
-      // construction — the input-skew exchange is pure overhead here
-      // (r16 isolated ×5: 0.90 s → 1.30 s with it, back without)
-      val found = Dedup.minhashPairs(docs, "doc_id", "text",
-        threshold = 0.5, fanOutInput = false)
-      val exact = Dedup.jaccardPairsExact(docs, "doc_id", "text",
-        threshold = 0.5, fanOutInput = false)
+      val found = Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.5)
+      val exact = Dedup.jaccardPairsExact(docs, "doc_id", "text", threshold = 0.5)
       exact.agg(count(lit(1)).as("n_exact_pairs"))
         .crossJoin(found.join(exact, Seq("id_a", "id_b", "jaccard"), "left_anti")
           .agg(count(lit(1)).as("n_false_pairs")))
@@ -142,7 +137,8 @@ object OpsQueries {
         .select(col("doc_id"), col("text"))
       val corpus = base.union(base.filter(col("doc_id") % 50 === 0)
         .select((col("doc_id") + lit(10000000L)).as("doc_id"), col("text")))
-      val pairs = Dedup.minhashPairs(corpus, "doc_id", "text", threshold = 0.5)
+      val pairs = Dedup.minhashPairs(Layout.fanOut(corpus), "doc_id", "text",
+          threshold = 0.5)
         .select(col("id_a"), col("id_b"))
       // twin detection joins on xxhash64(normalized text), never the
       // doc-sized text itself: the shuffle key is 8 bytes, and a 64-bit
@@ -183,9 +179,7 @@ object OpsQueries {
     // subset to keep the quadratic oracle cheap).
     "q_dedup_jaccard" -> { (s, dir) =>
       val docs = jaccardProbeDocs(s, dir)
-      // capped probe slice — input-skew fanOut is overhead here (r16)
-      Dedup.jaccardPairsExact(docs, "doc_id", "text", threshold = 0.5,
-          fanOutInput = false)
+      Dedup.jaccardPairsExact(docs, "doc_id", "text", threshold = 0.5)
         .orderBy(col("id_a"), col("id_b"))
     },
 
@@ -195,9 +189,7 @@ object OpsQueries {
     // prefix-filter theorem checked on real data.
     "q_prefix_jaccard" -> { (s, dir) =>
       val docs = jaccardProbeDocs(s, dir)
-      // capped probe slice — input-skew fanOut is overhead here (r16)
-      Dedup.prefixFilteredJaccardPairs(docs, "doc_id", "text",
-          threshold = 0.5, fanOutInput = false)
+      Dedup.prefixFilteredJaccardPairs(docs, "doc_id", "text", threshold = 0.5)
         .orderBy(col("id_a"), col("id_b"))
     },
 
@@ -210,7 +202,7 @@ object OpsQueries {
     "q_dup_flow" -> { (s, dir) =>
       val docs = jaccardProbeDocs(s, dir)
       val pairs = Dedup.prefixFilteredJaccardPairs(docs, "doc_id", "text",
-        threshold = 0.5, fanOutInput = false)
+        threshold = 0.5)
       val src = docs.select(col("doc_id"), col("source"))
       pairs
         .join(src.select(col("doc_id").as("id_a"), col("source").as("sa")),
@@ -255,10 +247,8 @@ object OpsQueries {
         .select((col("doc_id") + 500000L).as("doc_id"),
           array_join(slice(split(TextAnalysis.normalize(col("text")), " "),
             1, 8), " ").as("text"))
-      // shingle kernel is sub-0.5 s on this input — the input-skew
-      // fanOut exchange measured as overhead here (r16), keep it off
       Dedup.containmentPairs(docs.union(quotes), "doc_id", "text",
-          threshold = 0.9, fanOutInput = false)
+          threshold = 0.9)
         .orderBy(col("id_a"), col("id_b"))
     },
 
@@ -426,7 +416,8 @@ object OpsQueries {
       val corpus = base
         .union(seeds.select((col("doc_id") + lit(10000000L)).as("doc_id"), col("text")))
         .union(seeds.select((col("doc_id") + lit(20000000L)).as("doc_id"), col("text")))
-      val pairs = Dedup.minhashPairs(corpus, "doc_id", "text", threshold = 0.9)
+      val pairs = Dedup.minhashPairs(Layout.fanOut(corpus), "doc_id", "text",
+        threshold = 0.9)
       val memb = DupClusters.connectedComponents(pairs)
       def labelOf(offset: Long, as: String) =
         memb.select((col("id") - lit(offset)).as("id0"), col("cluster").as(as))

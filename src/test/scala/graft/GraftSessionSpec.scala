@@ -4,7 +4,8 @@ package graft
   * had it: an explicit value is restored, anything else is unset —
   * including a registered key, whose `getOption` default must not come
   * back as an explicit setting.  The session shape itself carries the
-  * `graft_cat` plugin catalog, so no gate sets it.
+  * `graft_cat` plugin catalog and the parquet `nanosAsLong` conf, so
+  * neither a gate nor a table load sets them.
   */
 class GraftSessionSpec extends SparkSpec {
 
@@ -31,12 +32,19 @@ class GraftSessionSpec extends SparkSpec {
 
   test("the session registers graft_cat, so the catalog gates leave its conf as it was") {
     assert(spark.conf.get("spark.sql.catalog.graft_cat") == "graft.sources.MemCatalog")
-    Tables.registerAll(spark, sf) // sets its own parquet conf once
+    Tables.registerAll(spark, sf)
     val before = spark.conf.getAll
     for (g <- Seq("q_catalog_table", "q_merge_into"))
       assert(Bench.runGate(spark, g, sf).isRight, g)
     val after = spark.conf.getAll
     assert((before.keySet ++ after.keySet).filter(k => before.get(k) != after.get(k)).isEmpty)
+  }
+
+  test("registering the tables on a new session leaves its conf as it was") {
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    Tables.registerAll(s, sf)
+    assert(s.conf.getAll == before)
   }
 
   test("withConf returns the body's value") {

@@ -69,7 +69,6 @@ class TablesSpec extends SparkSpec with BeforeAndAfterAll {
   for ((label, dir) <- Seq("pyarrow-written sf0.001" -> (() => sf),
       "Spark-written multi-part" -> (() => sparkWritten)))
     test(s"load gives spark.read.parquet's schema and analyzed output ($label)") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val s = fresh()
       Tables.names.foreach { n =>
         val got = Tables.load(s, dir(), n)

@@ -226,7 +226,7 @@ class LayoutSpec extends SparkSpec {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("text"))
     def fp(df: org.apache.spark.sql.DataFrame): Long =
-      Dedup.shingleSets(df, "doc_id", "text", 3, fanOutInput = false)
+      Dedup.shingleSets(df, "doc_id", "text", 3)
         .select(col("id"), explode(col("sh")).as("s"))
         .agg(sum(pmod(xxhash64(col("id"), col("s")), lit(1000000007L))).as("h"))
         .head().getLong(0)

@@ -1,6 +1,6 @@
 package graft.plans
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -14,26 +14,49 @@ import org.scalatest.funsuite.AnyFunSuite
   * 14), so like the collect/cartesian/window whitelists it is now
   * machine-checked instead of hand-fixed: write the backslash-u
   * escaped form in string literals, never the raw byte.
+  *
+  * The same scan holds the library's switches to a fixed list: every
+  * environment variable `src/main` reads is named in [[EnvAllowed]],
+  * and no `spark.graft.*` session conf exists.  A new switch has to be
+  * added to the list on purpose, next to the gate that proves it.
   */
 class ByteLintSpec extends AnyFunSuite {
 
+  private def scalaFiles(dir: String): List[Path] = {
+    val walk = Files.walk(Paths.get(dir))
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  private val EnvAllowed = Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
+    "SPARK_GRAFT_TMPDIR", "SPARK_LOCAL_DIRS", "SPARK_GRAFT_BENCH_RUNS",
+    "SPARK_GRAFT_BENCH_ONLY", "SPARK_GRAFT_SF3_DIR")
+
   test("no .scala file under src/ contains a raw byte < 0x09") {
-    val root = Paths.get("src")
-    val walk = Files.walk(root)
-    val offenders =
-      try walk.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala"))
-        .flatMap { p =>
-          val bytes = Files.readAllBytes(p)
-          val bad = bytes.indices.filter(i => (bytes(i) & 0xff) < 0x09)
-          if (bad.isEmpty) None
-          else Some(s"$p: raw byte(s) < 0x09 at offset(s) ${bad.take(5).mkString(", ")}" +
-            (if (bad.size > 5) s" (+${bad.size - 5} more)" else ""))
-        }
-        .toList
-      finally walk.close()
+    val offenders = scalaFiles("src").flatMap { p =>
+      val bytes = Files.readAllBytes(p)
+      val bad = bytes.indices.filter(i => (bytes(i) & 0xff) < 0x09)
+      if (bad.isEmpty) None
+      else Some(s"$p: raw byte(s) < 0x09 at offset(s) ${bad.take(5).mkString(", ")}" +
+        (if (bad.size > 5) s" (+${bad.size - 5} more)" else ""))
+    }
     assert(offenders.isEmpty,
       "raw control bytes in source (write the \\u0000 escape instead):\n  " +
         offenders.mkString("\n  "))
+  }
+
+  test("src/main reads only the allowed env vars and sets no spark.graft conf") {
+    val read = """(?:sys\.env|System\.getenv)(?:\.(?:get|getOrElse|contains))?\(\s*"([^"]*)"""".r
+    val any = """sys\.env|System\.getenv""".r
+    val offenders = scalaFiles("src/main").flatMap { p =>
+      val text = new String(Files.readAllBytes(p), "UTF-8")
+      val keys = read.findAllMatchIn(text).map(_.group(1)).toList
+      val unkeyed = any.findAllMatchIn(text).size - keys.size
+      keys.filterNot(EnvAllowed).map(k => s"$p: reads env var $k") ++
+        (if (unkeyed > 0) List(s"$p: $unkeyed env read(s) without a literal key") else Nil) ++
+        (if (text.contains("\"spark.graft.")) List(s"$p: names a spark.graft.* conf") else Nil)
+    }
+    assert(offenders.isEmpty, "switches outside the allow-list:\n  " +
+      offenders.mkString("\n  "))
   }
 }

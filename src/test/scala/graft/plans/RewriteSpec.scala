@@ -4,112 +4,12 @@ import org.apache.spark.sql.functions._
 
 import graft.{GraftSession, SparkSpec, Tables}
 
-/** Optimizer-injection surface: the flag-gated count(DISTINCT) → HLL++
-  * rewrite, and AQE's runtime skew-join splitting (the other half of
-  * the 100 TB skew story next to PipelineOps.saltedCountSum).
+/** Spark's own optimizer at work on graft plans: AQE's runtime
+  * partition coalescing and skew-join splitting (the other half of the
+  * 100 TB skew story next to PipelineOps.saltedCountSum), CBO join
+  * reordering after ANALYZE, and equi-height histogram column stats.
   */
 class RewriteSpec extends SparkSpec {
-
-  test("count(distinct) rewrites to approx_count_distinct under the graft flag") {
-    val li = Tables.load(spark, sf, "lineitem")
-    def q = li.agg(countDistinct(col("l_partkey")).as("n"))
-    val exact = q.head().getLong(0)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ ApproxDistinctRewrite
-    try {
-      spark.conf.set(ApproxDistinctRewrite.Flag, "true")
-      val rewritten = q
-      assert(rewritten.queryExecution.optimizedPlan.toString
-        .contains("approx_count_distinct"))
-      val approx = rewritten.head().getLong(0)
-      assert(math.abs(approx - exact).toDouble / math.max(exact, 1L) < 0.1)
-      spark.conf.set(ApproxDistinctRewrite.Flag, "false")
-      assert(q.head().getLong(0) == exact)
-      assert(!q.queryExecution.optimizedPlan.toString.contains("approx_count_distinct"))
-    } finally {
-      spark.conf.unset(ApproxDistinctRewrite.Flag)
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == ApproxDistinctRewrite)
-    }
-  }
-
-  test("grouped count(distinct) also rewrites under the flag") {
-    val li = Tables.load(spark, sf, "lineitem")
-    def q = li.groupBy(col("l_returnflag"))
-      .agg(countDistinct(col("l_partkey")).as("n"))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ ApproxDistinctRewrite
-    try {
-      spark.conf.set(ApproxDistinctRewrite.Flag, "true")
-      assert(q.queryExecution.optimizedPlan.toString
-        .contains("approx_count_distinct"))
-      assert(q.collect().nonEmpty)
-    } finally {
-      spark.conf.unset(ApproxDistinctRewrite.Flag)
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == ApproxDistinctRewrite)
-    }
-  }
-
-  private def usesMmc(df: org.apache.spark.sql.DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.expressions.exists(
-      _.exists(_.isInstanceOf[graft.functions.MultiMatchCount]))
-
-  test("contains OR-chain rewrites to one multi_match_count pass under the flag") {
-    val docs = Tables.load(spark, sf, "documents")
-    def q = docs.filter(
-      lower(col("text")).contains("spark") ||
-      lower(col("text")).contains("vector") ||
-      lower(col("text")).contains("zzznever"))
-    val exact = q.count()
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ MultiContainsRewrite
-    try {
-      spark.conf.set(MultiContainsRewrite.Flag, "true")
-      assert(usesMmc(q), "3-term same-column chain must rewrite")
-      assert(q.count() == exact, "rewrite changed the filter result")
-      spark.conf.set(MultiContainsRewrite.Flag, "false")
-      assert(!usesMmc(q), "flag off must leave the chain exact")
-    } finally {
-      spark.conf.unset(MultiContainsRewrite.Flag)
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == MultiContainsRewrite)
-    }
-  }
-
-  test("multi-contains guards: short/mixed/empty chains stay exact; NULL parity") {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    // RDD-backed, not a LocalRelation: ConvertToLocalRelation folds a
-    // Filter over literal rows away before extra rules ever run
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(
-        Row("a b", "x"), Row(null, "x"), Row("sparky", "y"))),
-      StructType(Seq(StructField("t", StringType), StructField("u", StringType))))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ MultiContainsRewrite
-    try {
-      spark.conf.set(MultiContainsRewrite.Flag, "true")
-      // below MinTerms the automaton buys nothing
-      assert(!usesMmc(df.filter(col("t").contains("a") || col("t").contains("b"))))
-      // mixed text columns must keep their exact per-column scans
-      assert(!usesMmc(df.filter(col("t").contains("a") ||
-        col("u").contains("b") || col("t").contains("c"))))
-      // contains(t, '') is TRUE for non-null t — folding it would lie
-      assert(!usesMmc(df.filter(col("t").contains("a") ||
-        col("t").contains("") || col("t").contains("c"))))
-      val chain = df.filter(col("t").contains("spark") ||
-        col("t").contains("zz") || col("t").contains("a b"))
-      assert(usesMmc(chain))
-      // NULL text row is dropped by the rewritten filter exactly as by
-      // the OR chain (three-valued logic parity)
-      assert(chain.collect().map(_.getString(0)).toSet == Set("a b", "sparky"))
-    } finally {
-      spark.conf.unset(MultiContainsRewrite.Flag)
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ == MultiContainsRewrite)
-    }
-  }
 
   test("AQE splits a skewed sort-merge-join partition at runtime") {
     val confs = Map(
