@@ -1,7 +1,10 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 /** Named-table registry over the driver-generated parquet test data.
   *
@@ -35,12 +38,15 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     synchronized {
       purgeStopped()
-      loaded.getOrElseUpdate((spark, dir, name),
-        if (name == "events") events(spark, dir)
-        else parquet(spark, s"$dir/$name.parquet"))
+      loaded.getOrElseUpdate((spark, dir, name), frame(spark, dir, name))
     }
   private val loaded =
     scala.collection.mutable.Map.empty[(SparkSession, String, String), DataFrame]
+
+  /** The unmemoized load; takes no lock. */
+  private def frame(spark: SparkSession, dir: String, name: String): DataFrame =
+    if (name == "events") events(spark, dir)
+    else parquet(spark, s"$dir/$name.parquet")
 
   private def parquet(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(FooterSchema.of(spark, path)).parquet(path)
@@ -82,6 +88,12 @@ object Tables {
     * ten succeed, so the next call retries: a transient load failure
     * can't wedge the session into TABLE_OR_VIEW_NOT_FOUND for the rest
     * of a battery.
+    *
+    * The ten loads and view registrations are independent, so they run
+    * concurrently, on `min(10, driver cores)` threads made for the call
+    * and joined before it returns; nothing about this is settable.  The
+    * memo, the failure report (in table order) and the current dir are
+    * written on the calling thread afterwards.
     */
   def registerAll(spark: SparkSession, dir: String): Unit = synchronized {
     purgeStopped()
@@ -89,17 +101,55 @@ object Tables {
       // Register each table independently: one table with an unexpected
       // schema must not poison the other nine views (a single failed
       // registerAll would otherwise take down every query in a battery).
-      val ok = names.map { n =>
-        try { load(spark, dir, n).createOrReplaceTempView(n); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[tables] failed to register '$n': ${e.getMessage}")
-          spark.catalog.dropTempView(n)
-          false
+      val (frames, errors) =
+        registerConcurrently(spark, dir, names.map(n => n -> loaded.get((spark, dir, n))))
+      val ok = names.indices.map { i =>
+        val n = names(i)
+        Option(frames(i)).foreach(loaded.getOrElseUpdate((spark, dir, n), _))
+        errors(i) match {
+          case null => true
+          case e =>
+            System.err.println(s"[tables] failed to register '$n': ${e.getMessage}")
+            spark.catalog.dropTempView(n)
+            false
         }
       }
       if (ok.forall(identity)) current(spark) = dir else current -= spark
     }
   }
+
+  /** Build each table's frame (or take its memoized one) and register
+    * its view, on a pool of `min(tables, driver cores)` daemon threads
+    * that the call starts and joins.  Returns per table the frame (null
+    * if it failed to build) and the error (null if the view registered).
+    * A worker runs with `spark` active and never takes the `Tables`
+    * monitor, which the caller holds.
+    */
+  private def registerConcurrently(spark: SparkSession, dir: String,
+      tables: Seq[(String, Option[DataFrame])]): (Array[DataFrame], Array[Throwable]) = {
+    val frames = new Array[DataFrame](tables.size)
+    val errors = new Array[Throwable](tables.size)
+    val next = new AtomicInteger()
+    val workers = Seq.tabulate(math.min(tables.size, Runtime.getRuntime.availableProcessors)) { w =>
+      val t = new Thread(() => {
+        var i = next.getAndIncrement()
+        while (i < tables.size) {
+          val (n, memo) = tables(i)
+          try SessionBridge.withActive(spark) {
+            frames(i) = memo.getOrElse(frame(spark, dir, n))
+            frames(i).createOrReplaceTempView(n)
+          } catch { case e: Throwable => errors(i) = e }
+          i = next.getAndIncrement()
+        }
+      }, s"graft-tables-register-$w")
+      t.setDaemon(true)
+      t
+    }
+    try workers.foreach(_.start())
+    finally workers.foreach(_.join())
+    (frames, errors)
+  }
+
   private val current = scala.collection.mutable.Map.empty[SparkSession, String]
 
   private def purgeStopped(): Unit = {

@@ -213,19 +213,6 @@ object Dedup {
   def shingles(text: Column, w: Int = 3): Column =
     shinglesFromTokens(split(TextAnalysis.normalize(text), " "), w)
 
-  /** k seeded MinHash values of a 64-bit shingle array: column i is
-    * min(xxhash64(i, shingle)).  Stays entirely in codegen; the k
-    * hashes are independent because the seed literal participates in
-    * the xxhash mix.  (Array formulation — fine for narrow use; the
-    * pipeline uses [[minhashSignatures]] which computes the same values
-    * via explode + partial aggregation, avoiding k array
-    * materializations per row.)
-    */
-  def minhashSignature(shingleCol: Column, k: Int = 64): Column =
-    array((0 until k).map { i =>
-      array_min(transform(shingleCol, s => xxhash64(lit(i), s)))
-    }: _*)
-
   /** Signature table (id, h0..h{k-1}) computed scale-first: explode the
     * shingle set once and take k seeded mins with hash aggregation.
     * Partial aggregation (map-side combine) means the shuffle carries k
@@ -236,27 +223,6 @@ object Dedup {
     val ex = sh.select(col("id"), explode(col("sh")).as("h"))
     val aggs = (0 until k).map(i => min(xxhash64(lit(i), col("h"))).as(s"h$i"))
     ex.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** LSH candidate pairs from signatures: b bands of r rows.  Pairs
-    * sharing any band bucket are candidates.  Self-join is on the
-    * (band, bucket) equi-key — broadcast-free, shuffle-partitioned by
-    * bucket, skew-safe because bucket cardinality is bounded by band
-    * hashing.
-    */
-  def lshCandidates(sigs: DataFrame, idCol: String, sigCol: String,
-      bands: Int = 16, rows: Int = 4): DataFrame = {
-    val banded = sigs.select(col(idCol).as("id"), col(sigCol).as("sig"))
-      .select(col("id"), posexplode(array((0 until bands).map { b =>
-        xxhash64((lit(b) +: (0 until rows).map(r =>
-          element_at(col("sig"), b * rows + r + 1))): _*)
-      }: _*)).as(Seq("band", "bucket")))
-    val l = banded.select(col("band"), col("bucket"), col("id").as("id_a"))
-    val r = banded.select(col("band"), col("bucket"), col("id").as("id_b"))
-    l.join(r, Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
   }
 
   /** Full MinHash near-dup pipeline with exact-Jaccard refine: returns

@@ -48,6 +48,18 @@ object StreamingQueries {
       .parquet(tmp)
   }
 
+  /** The parquet table a `foreachBatch` sink keeps at `dir`, or `empty`
+    * while nothing has been written there (the dir does not exist).  Any
+    * other read error, such as a dir that holds no readable parquet,
+    * fails the batch and so the gate, instead of reading as "empty".
+    */
+  private[queries] def parquetOrEmpty(s: SparkSession, dir: String)(
+      empty: => DataFrame): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    if (p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)) s.read.parquet(dir)
+    else empty
+  }
+
   /** ORDER-PRESERVING replay: each chunk becomes one file with a
     * strictly increasing (fixed, deterministic) modification time, so
     * FileStreamSource — which orders files by (modTime, path) — serves
@@ -662,6 +674,9 @@ object StreamingQueries {
         .select(col("user_id"), col("value").cast("decimal(12,2)").as("v"))
       val stream = replay(s, ev, chunks = 3)
       val state = graft.TmpCleanup.tempDir("graft_febatch_state")
+      val fs = org.apache.hadoop.fs.FileSystem.get(
+        s.sparkContext.hadoopConfiguration)
+      fs.delete(new org.apache.hadoop.fs.Path(state), true)
       val merged = stream.groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"), max(col("v")).as("vmax"))
       withStatePartitions(s) {
@@ -670,14 +685,10 @@ object StreamingQueries {
           .foreachBatch { (batch: DataFrame, _: Long) =>
             // read-modify-write on the small keyed aggregate (never the
             // fact); the swap stands in for a table format's commit
-            val cur =
-              try s.read.parquet(state)
-              catch { case _: Exception => batch.limit(0) }
+            val cur = parquetOrEmpty(s, state)(batch.limit(0))
             graft.ops.Upsert(cur, batch, Seq("user_id"))
               .coalesce(1)
               .write.mode("overwrite").parquet(state + "_next")
-            val fs = org.apache.hadoop.fs.FileSystem.get(
-              s.sparkContext.hadoopConfiguration)
             val dst = new org.apache.hadoop.fs.Path(state)
             fs.delete(dst, true)
             fs.rename(new org.apache.hadoop.fs.Path(state + "_next"), dst)
@@ -764,9 +775,7 @@ object StreamingQueries {
         val q = stream.writeStream
           .outputMode("append")
           .foreachBatch { (batch: DataFrame, _: Long) =>
-            val hist =
-              try s.read.parquet(state)
-              catch { case _: Exception => batch.limit(0) }
+            val hist = parquetOrEmpty(s, state)(batch.limit(0))
             graft.ops.Dedup.incrementalDedup(batch, hist, "text", 600L)
               .coalesce(1).write.mode("append").parquet(state)
             ()
@@ -827,14 +836,11 @@ object StreamingQueries {
         val q = stream.writeStream
           .outputMode("append")
           .foreachBatch { (batch: DataFrame, _: Long) =>
-            val (hIdx, hSets) =
-              try (s.read.parquet(idxDir), s.read.parquet(setsDir))
-              catch { case _: Exception =>
-                val e = graft.ops.Dedup.shingleSets(
-                  batch.limit(0), "doc_id", "dd_text")
-                (e.select(col("id"), lit(0).cast("int").as("band"),
-                  lit(0L).as("bucket")), e)
-              }
+            lazy val noSets = graft.ops.Dedup.shingleSets(
+              batch.limit(0), "doc_id", "dd_text")
+            val hIdx = parquetOrEmpty(s, idxDir)(noSets.select(col("id"),
+              lit(0).cast("int").as("band"), lit(0L).as("bucket")))
+            val hSets = parquetOrEmpty(s, setsDir)(noSets)
             val (surv, kIdx, kSets) = graft.ops.Dedup.nearDupAgainstIndex(
               batch, "doc_id", "dd_text", hIdx, hSets, threshold = 1.0)
             surv.coalesce(1).write.mode("append").parquet(outDir)

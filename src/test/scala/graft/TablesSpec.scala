@@ -3,6 +3,8 @@ package graft
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, unix_micros}
@@ -125,5 +127,30 @@ class TablesSpec extends SparkSpec with BeforeAndAfterAll {
     Tables.names.filter(_ != "orders").foreach { n =>
       assert(s.table(n).inputFiles.forall(_.contains(dir.toString)), n)
     }
+  }
+
+  test("two sessions registering different dirs at once each see their own") {
+    val dirs = Seq(sf, "/root/testdata/sf0.01")
+    val sessions = dirs.map(_ => fresh())
+    val threads = sessions.zip(dirs).map { case (s, d) =>
+      new Thread(() => Tables.registerAll(s, d))
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    sessions.zip(dirs).foreach { case (s, d) =>
+      Tables.names.foreach { n =>
+        val files = s.table(n).inputFiles
+        assert(files.nonEmpty && files.forall(_.contains(s"$d/")), s"$d $n")
+      }
+      assert(s.sql("SELECT count(*) FROM orders").head().getLong(0) ==
+        spark.read.parquet(s"$d/orders.parquet").count(), d)
+    }
+  }
+
+  test("registerAll leaves no registration thread alive") {
+    Tables.registerAll(fresh(), sf)
+    val alive = Thread.getAllStackTraces.keySet.asScala.toSeq
+      .map(_.getName).filter(_.startsWith("graft-tables-register"))
+    assert(alive.isEmpty, alive)
   }
 }
