@@ -116,27 +116,24 @@ object ColumnLineage {
     case other => other.nodeName
   }
 
-  /** Durable table identity of a leaf, for the SINK-side registry
-    * splice ([[SinkLineage]]): catalog tables by identifier, file
-    * relations by root path, v2 relations by table name — normalized
-    * the same way the write capture normalized them.
+  /** Storage location of a leaf, for the SINK-side registry splice
+    * ([[SinkLineage]]): a catalog table's `location`, else a file
+    * relation's root path, a v2 relation's table name — normalized the
+    * same way the write capture normalized them.
     */
-  private def leafTableId(leaf: LeafNode): Option[String] = leaf match {
+  private def leafLocation(leaf: LeafNode): Option[String] = (leaf match {
     case lr: LogicalRelation =>
-      lr.catalogTable
-        .map(t => SinkLineage.normalizeId(t.identifier.unquotedString))
+      lr.catalogTable.flatMap(_.storage.locationUri).map(_.toString)
         .orElse(lr.relation match {
           case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.rootPaths.headOption
-              .map(p => SinkLineage.normalizeId(p.toString))
+            fs.location.rootPaths.headOption.map(_.toString)
           case _ => None
         })
     case h: org.apache.spark.sql.catalyst.catalog.HiveTableRelation =>
-      Some(SinkLineage.normalizeId(h.tableMeta.identifier.unquotedString))
-    case d: DataSourceV2Relation =>
-      Some(SinkLineage.normalizeId(d.table.name()))
+      h.tableMeta.storage.locationUri.map(_.toString)
+    case d: DataSourceV2Relation => Some(d.table.name())
     case _ => None
-  }
+  }).map(SinkLineage.normalizeId)
 
   // ──────────────────── hop-level derivation DAG ────────────────────
   //
@@ -287,19 +284,20 @@ object ColumnLineage {
       // table that a captured WRITE produced as a relation leaf: splice
       // the registered pre-materialization hop tree in instead of
       // naming the leaf a source, so lineage composes across
-      // materializations.  Self-joined checkpoints get re-instanced
-      // with fresh ExprIds during analysis — fall back to the (rdd id,
-      // column) identity.
+      // materializations.  A checkpoint's trees are found by the leaf's
+      // RDD object and output position, which a self-join's
+      // re-instancing (fresh ExprIds) keeps; a write's by the leaf's
+      // storage location and column name.
       val table = alias.getOrElse(leafName(l))
-      val rddId = l match {
-        case r: org.apache.spark.sql.execution.LogicalRDD => Some(r.rdd.id)
+      val checkpoint = l match {
+        case r: org.apache.spark.sql.execution.LogicalRDD =>
+          LineageRegistry.checkpointHops(r.rdd)
         case _ => None
       }
-      val tableId = leafTableId(l)
-      l.output.map { a =>
-        a.exprId -> LineageRegistry.lookupHop(a.exprId)
-          .orElse(rddId.flatMap(LineageRegistry.lookupHopByRdd(_, a.name)))
-          .orElse(tableId.flatMap(LineageRegistry.lookupTableHop(_, a.name)))
+      val written = leafLocation(l).flatMap(LineageRegistry.writeHops)
+      l.output.zipWithIndex.map { case (a, i) =>
+        a.exprId -> checkpoint.flatMap(_.lift(i))
+          .orElse(written.flatMap(_.get(a.name)))
           .getOrElse(LeafHop(SourceColumn(table, a.name)))
       }.toMap
 

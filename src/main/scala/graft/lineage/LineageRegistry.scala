@@ -1,6 +1,8 @@
 package graft.lineage
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.LogicalRDD
 
 import ColumnLineage.{DerivedHop, HopNode, SourceColumn}
 
@@ -12,48 +14,48 @@ import ColumnLineage.{DerivedHop, HopNode, SourceColumn}
   *
   * At the moment of checkpointing, the PRE-checkpoint analyzed plan is
   * still in hand: [[capture]] walks its output columns' hop trees and
-  * records them keyed by the POST-checkpoint output ExprIds (paired
-  * positionally — names and order are preserved by `localCheckpoint`).
-  * [[ColumnLineage]] consults the registry at every leaf attribute, so
+  * records them under the checkpoint's RDD object, in output order
+  * (`localCheckpoint` keeps names and order, and `LogicalRDD.newInstance`
+  * keeps the RDD, so a self-joined copy finds them too).
+  * [[ColumnLineage]] consults the registry at every leaf, so
   * `ColumnLineage.of(Dedup.minhashPairs(...))` traces `jaccard` all the
   * way to `documents.text` even though the physical plan starts at an
   * RDD scan.  Chained checkpoints compose naturally — each round's
   * capture walks a plan whose leaves splice the previous round's trees.
   *
-  * One immutable, shared hop tree per key; source sets are its leaves.
-  * Driver-side plan metadata only — a few dozen entries per checkpoint,
-  * capped at [[MaxEntries]] so a pathological loop cannot leak; a cap
-  * clear is announced on stderr.
+  * Each piece of state is keyed by what it describes: a checkpoint's
+  * hops live exactly as long as its RDD, and a write's hops sit under
+  * the storage location that the write filled ([[SinkLineage]]).  No
+  * key is reused across SparkContexts or warehouses, so no entry can
+  * attach to a stranger's relation, and nothing needs a cap.
   */
 object LineageRegistry {
 
-  private val MaxEntries = 65536
+  // Checkpoint RDD → its columns' hop trees in output order.  RDD
+  // overrides neither equals nor hashCode, so this is an identity map.
+  // A HopNode holds only strings and children, so no value pins its
+  // key: an entry goes once no plan references its RDD.
+  private val byRdd = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[RDD[_], IndexedSeq[HopNode]]())
 
-  private val byExprId =
-    new java.util.concurrent.ConcurrentHashMap[Long, HopNode]()
-  // Fallback identity for SELF-JOINED checkpoints: analysis
-  // deduplication replaces one side's relation with newInstance() —
-  // same underlying RDD, FRESH output ExprIds — so the ExprId key
-  // misses.  The (rdd id, column name) pair survives the re-instancing.
-  private val byRddCol =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), HopNode]()
-  // SINK-side lineage: (written table identity, column name) → hop tree
-  // of the WRITING query, captured by [[SinkLineage]] at `df.write` /
-  // `INSERT INTO` / CTAS time.  A later read of that table splices it
-  // in, so column lineage composes table-to-table across
-  // materializations — the same device as the checkpoint maps, keyed
-  // by durable table identity instead of runtime ExprIds.
-  private val byTableCol =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), HopNode]()
+  // Storage location (a path, or a v2 table's catalog-qualified name)
+  // → written column → hop tree of the writing query.
+  private val byLocation =
+    new java.util.concurrent.ConcurrentHashMap[String, Map[String, HopNode]]()
 
-  /** Clear `maps` together once any of them passes [[MaxEntries]],
-    * with one warning naming the map that overflowed. */
-  private def capped(
-      maps: (String, java.util.concurrent.ConcurrentHashMap[_, _])*): Unit =
-    maps.find(_._2.size() > MaxEntries).foreach { case (name, m) =>
-      System.err.println(s"[lineage] registry map $name holds ${m.size()} " +
-        s"entries (cap $MaxEntries); clearing ${maps.map(_._1).mkString(", ")}")
-      maps.foreach(_._2.clear())
+  private val announced =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Run one lineage capture.  Never throws: a capture must not be able
+    * to fail the operator, write or sink that calls it.  The first
+    * failure at each `site` is announced on stderr; later ones are not.
+    */
+  private[lineage] def guarded(site: String)(body: => Unit): Unit =
+    try body catch {
+      case e @ scala.util.control.NonFatal(_) =>
+        if (announced.add(site))
+          Console.err.println(s"[lineage] $site capture failed: " +
+            s"${e.getClass.getName}: ${e.getMessage}")
     }
 
   /** Registered hop of a captured column that derives from nothing (a
@@ -63,79 +65,55 @@ object LineageRegistry {
   private def emptyHop(name: String, node: String): HopNode =
     DerivedHop(name, "checkpoint", node, Nil)
 
-  /** Walk `pre`'s output lineage and register it under `post`'s
-    * output ExprIds (and the checkpoint RDD's (id, column) identity).
-    * Never throws: lineage capture must not be able to fail the
-    * operator that calls it.
+  /** Walk `pre`'s output lineage and register it under the RDD of the
+    * `LogicalRDD` that `post` (its checkpointed plan) scans.
     */
   def capture(pre: LogicalPlan, post: LogicalPlan): Unit =
-    try {
-      val hops = ColumnLineage.outputHops(pre)
-      capped("byExprId" -> byExprId, "byRddCol" -> byRddCol)
-      val rdd = post.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l
+    guarded("checkpoint") {
+      post.collectFirst { case r: LogicalRDD => r }.foreach { r =>
+        val hops = ColumnLineage.outputHops(pre)
+        byRdd.put(r.rdd, post.output.zip(pre.output).map { case (p, b) =>
+          hops.getOrElse(b.exprId, emptyHop(p.name, r.nodeName))
+        }.toIndexedSeq)
       }
-      post.output.zip(pre.output).foreach { case (p, b) =>
-        val h = hops.getOrElse(b.exprId,
-          emptyHop(p.name, rdd.fold("LogicalRDD")(_.nodeName)))
-        byExprId.put(p.exprId.id, h)
-        rdd.foreach(r => byRddCol.put((r.rdd.id, p.name), h))
-      }
-    } catch { case scala.util.control.NonFatal(_) => }
+    }
 
-  /** Record the lineage of a WRITE: `columnNames` are the written
-    * table's column names (positionally aligned with `query.output` —
-    * Spark projects the query to table order before any insert).
-    * Append-mode writes join what the table already carried under an
-    * "append" hop (the table's contents now derive from both);
-    * overwrite/CTAS replaces.  Never throws.
+  /** Record the lineage of a WRITE to `location`: `columnNames` are the
+    * written table's column names (positionally aligned with
+    * `query.output` — Spark projects the query to table order before
+    * any insert).  An append joins each column's previous hop under an
+    * "append" hop (the contents now derive from both); an overwrite or
+    * CTAS replaces the location's whole entry.
     */
-  def captureWrite(table: String, columnNames: Seq[String],
+  def captureWrite(location: String, columnNames: Seq[String],
       query: LogicalPlan, append: Boolean): Unit =
-    try {
+    guarded("write") {
       val hops = ColumnLineage.outputHops(query)
-      capped("byTableCol" -> byTableCol)
-      columnNames.zip(query.output).foreach { case (name, attr) =>
-        val key = (table, name)
-        val h = hops.getOrElse(attr.exprId, emptyHop(name, "Write"))
-        val prev = if (append) Option(byTableCol.get(key)) else None
-        byTableCol.put(key, prev.fold(h)(p =>
-          DerivedHop(name, "append", "Write", Seq(p, h))))
-      }
-    } catch { case scala.util.control.NonFatal(_) => }
+      val cols = columnNames.zip(query.output).map { case (name, attr) =>
+        name -> hops.getOrElse(attr.exprId, emptyHop(name, "Write"))
+      }.toMap
+      if (append) byLocation.merge(location, cols, (prev, now) =>
+        prev ++ now.map { case (name, h) =>
+          name -> prev.get(name).fold(h)(p =>
+            DerivedHop(name, "append", "Write", Seq(p, h)))
+        })
+      else byLocation.put(location, cols)
+    }
 
-  /** Drop one written table's recorded lineage (a DROP TABLE or an
+  /** Drop one location's recorded lineage (a DROP TABLE or an
     * overwrite by an uninstrumented engine invalidates it). */
-  def forgetTable(table: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    byTableCol.keySet().asScala.filter(_._1 == table)
-      .foreach(byTableCol.remove)
-  }
+  def forgetTable(location: String): Unit = byLocation.remove(location)
 
-  /** Recorded write lineage (leaf sources) for a (table identity, column). */
-  def lookupTable(table: String, column: String): Option[Set[SourceColumn]] =
-    lookupTableHop(table, column).map(_.sources)
+  /** Recorded write lineage (leaf sources) for a (location, column). */
+  def lookupTable(location: String, column: String): Option[Set[SourceColumn]] =
+    writeHops(location).flatMap(_.get(column)).map(_.sources)
 
-  /** Recorded write hop tree for a (table identity, column). */
-  private[lineage] def lookupTableHop(table: String, column: String)
-      : Option[HopNode] =
-    Option(byTableCol.get((table, column)))
+  /** Recorded write hop trees of a location, by column. */
+  private[lineage] def writeHops(location: String): Option[Map[String, HopNode]] =
+    Option(byLocation.get(location))
 
-  /** Registered pre-checkpoint hop tree for an output attribute, if this
-    * ExprId was ever the output of a captured checkpoint. */
-  private[lineage] def lookupHop(
-      exprId: org.apache.spark.sql.catalyst.expressions.ExprId)
-      : Option[HopNode] =
-    Option(byExprId.get(exprId.id))
-
-  /** Fallback lookup by the checkpoint RDD's identity and column name
-    * (re-instanced self-join branches). */
-  private[lineage] def lookupHopByRdd(rddId: Int, column: String)
-      : Option[HopNode] =
-    Option(byRddCol.get((rddId, column)))
-
-  /** Test hook. */
-  private[graft] def clear(): Unit = {
-    byExprId.clear(); byRddCol.clear(); byTableCol.clear()
-  }
+  /** Registered pre-checkpoint hop trees of a checkpoint RDD, in output
+    * order. */
+  private[lineage] def checkpointHops(rdd: RDD[_]): Option[IndexedSeq[HopNode]] =
+    Option(byRdd.get(rdd))
 }

@@ -9,15 +9,21 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** WRITE-path lineage capture: record the column lineage of
-  * `df.write` / `INSERT INTO` / CTAS statements keyed by the WRITTEN
-  * table's durable identity, so a later read of that table splices the
-  * producing query's lineage back in and column lineage composes
+  * `df.write` / `INSERT INTO` / CTAS statements keyed by the storage
+  * location the write filled, so a later read of that location splices
+  * the producing query's lineage back in and column lineage composes
   * table-to-table across materializations (read → transform → write →
   * read → …).  The reference's lineage (an analyzer-rule walk,
   * `sql/catalyst/.../analysis/ResolveLineage.scala:29`) stops at every
   * materialization; this is the same registry-splice device graft uses
-  * for lineage-erasing checkpoints ([[LineageRegistry.capture]]),
-  * keyed by (table identity, column name) instead of runtime ExprIds.
+  * for lineage-erasing checkpoints ([[LineageRegistry.capture]]).
+  *
+  * A file write is keyed by its output path, a v1 or Hive catalog
+  * table by the `location` its session catalog holds once the command
+  * has succeeded, so two warehouses' `default.t` never share an entry.
+  * A DSv2 table is keyed by its catalog-qualified name: `MemCatalog`'s
+  * store is JVM-wide and keyed by catalog name, so for those tables the
+  * name is the location.
   *
   * Two capture routes:
   *  - [[capture]] — synchronous, on the command's own QueryExecution
@@ -28,27 +34,20 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    `sparkContext.listenerBus.waitUntilEmpty()`).
   *
   * Driver-side plan metadata only; a capture failure never fails the
-  * write ([[LineageRegistry.captureWrite]] swallows).
+  * write ([[LineageRegistry.guarded]] announces the first one).
   */
 object SinkLineage {
 
-  /** Durable identity normalization, shared by the write capture and
-    * the read-side splice: strip the `file:` scheme and trailing
-    * slashes from paths, the implicit `spark_catalog.` prefix from
-    * catalog table names — the two sides qualify differently.
+  /** Location normalization, shared by the write capture and the
+    * read-side splice: strip the `file:` scheme and trailing slashes
+    * from paths, the implicit `spark_catalog.` prefix from v2 table
+    * names — the two sides qualify differently.
     */
   def normalizeId(id: String): String = {
-    val noScheme = if (id.startsWith("file:")) id.stripPrefix("file:") else id
-    val noSlash = noSchemeStripSlash(noScheme)
-    if (noSlash.startsWith("spark_catalog."))
-      noSlash.stripPrefix("spark_catalog.")
-    else noSlash
-  }
-
-  private def noSchemeStripSlash(s: String): String = {
+    val s = id.stripPrefix("file:")
     var e = s.length
     while (e > 1 && s.charAt(e - 1) == '/') e -= 1
-    s.substring(0, e)
+    s.substring(0, e).stripPrefix("spark_catalog.")
   }
 
   /** Inspect one executed plan and record any write it performs.
@@ -56,35 +55,31 @@ object SinkLineage {
     * commands, and the DSv2 write nodes.  Non-write plans no-op.
     */
   def capture(qe: QueryExecution): Unit =
-    try captureLogical(qe.analyzed) catch {
-      case scala.util.control.NonFatal(_) => ()
+    LineageRegistry.guarded("sink") {
+      captureLogical(qe.sparkSession, qe.analyzed)
     }
 
-  private def captureLogical(plan: LogicalPlan): Unit = plan match {
+  private def captureLogical(spark: SparkSession,
+      plan: LogicalPlan): Unit = plan match {
     // eagerly-executed commands surface wrapped after execution
     case cr: CommandResult =>
-      captureLogical(cr.commandLogicalPlan)
+      captureLogical(spark, cr.commandLogicalPlan)
 
     case c: InsertIntoHadoopFsRelationCommand =>
-      val id = c.catalogTable.map(_.identifier.unquotedString)
-        .getOrElse(c.outputPath.toString)
       val append = c.mode == org.apache.spark.sql.SaveMode.Append
-      LineageRegistry.captureWrite(normalizeId(id), c.outputColumnNames,
-        c.query, append)
+      LineageRegistry.captureWrite(normalizeId(c.outputPath.toString),
+        c.outputColumnNames, c.query, append)
 
     case c: CreateDataSourceTableAsSelectCommand =>
-      LineageRegistry.captureWrite(
-        normalizeId(c.table.identifier.unquotedString),
+      LineageRegistry.captureWrite(location(spark, c.table.identifier),
         c.outputColumnNames, c.query, append = false)
 
     case c: org.apache.spark.sql.hive.execution.InsertIntoHiveTable =>
-      LineageRegistry.captureWrite(
-        normalizeId(c.table.identifier.unquotedString),
+      LineageRegistry.captureWrite(location(spark, c.table.identifier),
         c.outputColumnNames, c.query, append = !c.overwrite)
 
     case c: org.apache.spark.sql.hive.execution.CreateHiveTableAsSelectCommand =>
-      LineageRegistry.captureWrite(
-        normalizeId(c.tableDesc.identifier.unquotedString),
+      LineageRegistry.captureWrite(location(spark, c.tableDesc.identifier),
         c.outputColumnNames, c.query, append = false)
 
     // ── DSv2 write nodes (the analyzed statements) ──
@@ -125,6 +120,13 @@ object SinkLineage {
 
     case _ => ()
   }
+
+  /** A written catalog table's location, read back from the session
+    * catalog (a CTAS's own description has none yet). */
+  private def location(spark: SparkSession,
+      table: org.apache.spark.sql.catalyst.TableIdentifier): String =
+    normalizeId(spark.sessionState.catalog.getTableMetadata(table)
+      .location.toString)
 
   /** Capture a rewritten row-level command.  The query's output may
     * trail metadata/operation attrs (row id, __row_operation,
@@ -168,15 +170,17 @@ object SinkLineage {
         exception: Exception): Unit = ()
   }
 
-  private val registered =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
+  // weak: a registered session that nothing else holds can be collected
+  private val registered = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
   /** Idempotently attach the write-capture listener to a session. */
   def register(spark: SparkSession): Unit =
-    if (registered.add(spark)) spark.listenerManager.register(listener)
+    if (registered.synchronized(registered.add(spark)))
+      spark.listenerManager.register(listener)
 
   /** Detach (test hook). */
   def unregister(spark: SparkSession): Unit =
-    if (registered.remove(spark)) spark.listenerManager.unregister(listener)
+    if (registered.synchronized(registered.remove(spark)))
+      spark.listenerManager.unregister(listener)
 }

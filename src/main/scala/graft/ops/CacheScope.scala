@@ -22,8 +22,9 @@ import org.apache.spark.sql.DataFrame
 private[graft] object CacheScope {
   /** Materialize `result`, then unpersist every cache it was built from.
     * The pre-checkpoint lineage is captured into
-    * [[graft.lineage.LineageRegistry]] first, so column lineage traces
-    * THROUGH the checkpoint instead of stopping at the RDD scan. */
+    * [[graft.lineage.LineageRegistry]] first, under the checkpoint's RDD
+    * object, so column lineage traces THROUGH the checkpoint instead of
+    * stopping at the RDD scan; the entry goes when that RDD does. */
   def releasing(result: DataFrame, caches: DataFrame*): DataFrame = {
     val out = result.localCheckpoint(true)
     graft.lineage.LineageRegistry.capture(
@@ -34,8 +35,9 @@ private[graft] object CacheScope {
 
   /** A lineage-captured `localCheckpoint` with no cache release — for
     * iterative ops that cut plan lineage each round (PageRank-style
-    * loops): the registry capture lets column lineage chain through
-    * every round's LogicalRDD instead of dead-ending at the first.
+    * loops): the registry capture, keyed by each round's RDD object,
+    * lets column lineage chain through every round's LogicalRDD instead
+    * of dead-ending at the first.
     * `eager = false` keeps the per-round lazy-materialization contract
     * (capture only reads the analyzed plans, never runs a job). */
   def traced(result: DataFrame, eager: Boolean = true): DataFrame = {

@@ -104,7 +104,8 @@ object LineageQueries {
 
     // SINK-side (write-path) lineage: a CTAS materializes a lineitem
     // aggregate into a catalog table, the write's lineage is captured
-    // keyed by the TABLE identity, and a fresh read of that table —
+    // keyed by the table's storage location (the CTAS replaces any
+    // earlier entry there), and a fresh read of that table —
     // whose plan is just a parquet scan, where the reference (and any
     // plain plan walk) loses the trail — traces its derived columns
     // all the way back to lineitem through the materialization.  An
@@ -113,7 +114,6 @@ object LineageQueries {
     "q_lineage_sink" -> { (s, dir) =>
       Tables.registerAll(s, dir)
       s.sql("DROP TABLE IF EXISTS graft_sink_rev")
-      graft.lineage.LineageRegistry.forgetTable("default.graft_sink_rev")
       val ctas = s.sql(
         """CREATE TABLE graft_sink_rev USING parquet AS
           |SELECT l_returnflag AS flag,

@@ -766,8 +766,6 @@ class LineageSpec extends SparkSpec {
     base.createOrReplaceTempView("sink_li")
     spark.sql("DROP TABLE IF EXISTS sink_hop1")
     spark.sql("DROP TABLE IF EXISTS sink_hop2")
-    LineageRegistry.forgetTable("default.sink_hop1")
-    LineageRegistry.forgetTable("default.sink_hop2")
     // hop 1: CTAS from lineitem (captured synchronously off the qe)
     val ctas1 = spark.sql(
       """CREATE TABLE sink_hop1 USING parquet AS

@@ -42,13 +42,11 @@ class ByteLintSpec extends AnyFunSuite {
     "graft/TmpCleanup.scala" ->
       "best-effort scratch delete: never fail shutdown",
     "graft/lineage/LineageRegistry.scala" ->
-      "lineage capture must not fail the query; failures not yet counted",
-    "graft/lineage/LineageRegistry.scala" ->
-      "write lineage capture must not fail the write; failures not yet counted",
-    "graft/lineage/SinkLineage.scala" ->
-      "sink lineage capture must not fail the sink; failures not yet counted",
+      ("LineageRegistry.guarded: checkpoint, write and sink capture must not " +
+        "fail their caller; the first failure per site is announced"),
     "graft/lineage/StreamingLineage.scala" ->
-      "stream lineage capture must not fail the stream; failures not yet counted",
+      ("stream lineage capture must not fail the stream; a start event " +
+        "racing plan initialization fails as expected, progress re-captures"),
     "graft/queries/FuzzQueries.scala" ->
       "seed probe tool: -1 marks a candidate seed whose query fails")
 
